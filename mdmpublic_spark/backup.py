@@ -102,6 +102,7 @@ class BackupManager:
             "stored": stored,
             "snapshot_id": cur.snapshot_id,
             "row_count": cur.row_count,
+            "schema": cur.schema,
         }
         self._save(gens + [entry])
         return entry
@@ -137,6 +138,7 @@ class BackupManager:
                     ts=_dt.datetime.now().timestamp(),
                     row_count=target["row_count"],
                     data_dirs=list(target["covers"]),
+                    schema=target.get("schema"),
                 )
             ]
         )

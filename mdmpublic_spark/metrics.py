@@ -14,16 +14,17 @@ to a snapshot-versioned metrics table: partition_id = -1 for stage-level
 counters (rows written, wall seconds, dropped pairs…), >= 0 for
 per-partition row counts (the lineage required by the north_rule).
 
-Scale note: per-partition counts are computed with a single
-``groupBy(spark_partition_id())`` over the stage output — one narrow
-aggregation, output rows = number of partitions (thousands at most),
-safe to collect nowhere: it is written distributed, never collected.
+Scale note: per-partition counts come from the stage output's parquet
+footers (``Table.file_row_counts``, one file per write task) — no Spark
+job. Rows are buffered on the driver (O(stages × partitions)) and each
+flush appends them as one Arrow-built frame, so no Python worker runs.
 """
 
 from __future__ import annotations
 
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -59,43 +60,15 @@ class MetricsSink:
     def add(self, stage: str, key: str, value: float, partition_id: int = -1) -> None:
         self._pending.append((time.time(), self.run_id, stage, partition_id, key, float(value)))
 
-    def add_partition_counts(self, stage: str, df: DataFrame) -> int:
-        """Record per-partition row counts of a stage output (lineage).
-
-        Returns the total row count (so callers don't pay a second count).
-        """
-        rows = (
-            df.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()  # one row per partition — O(partitions), not O(data)
-        )
-        total = 0
-        for r in rows:
-            self.add(stage, "partition_rows", float(r["n"]), partition_id=int(r["pid"]))
-            total += int(r["n"])
-        self.add(stage, "rows", float(total))
-        return total
-
     def flush(self, spark: SparkSession) -> None:
         if not self._pending:
             return
-        data = [
-            (None, run_id, stage, pid, key, val)  # ts filled below from epoch
-            for (_, run_id, stage, pid, key, val) in self._pending
-        ]
-        epochs = [p[0] for p in self._pending]
-        df = spark.createDataFrame(
-            [(e, *rest[1:]) for e, rest in zip(epochs, data)],
-            schema=StructType(
-                [StructField("epoch", DoubleType())] + list(METRICS_SCHEMA.fields[1:])
-            ),
-        ).select(
-            F.timestamp_seconds(F.col("epoch")).alias("ts"),
-            "run_id",
-            "stage",
-            "partition_id",
-            "key",
-            "value",
+        # a pandas frame crosses to the JVM as Arrow batches; a row list
+        # would run Python worker tasks to build the same frame
+        pdf = pd.DataFrame(self._pending, columns=["epoch", *METRICS_SCHEMA.names[1:]])
+        schema = StructType([StructField("epoch", DoubleType())] + METRICS_SCHEMA.fields[1:])
+        df = spark.createDataFrame(pdf, schema=schema).select(
+            F.timestamp_seconds(F.col("epoch")).alias("ts"), *METRICS_SCHEMA.names[1:]
         )
         self.table.append(df)
         self._pending = []

@@ -30,6 +30,7 @@ chef/setup_jenkins/jenkins_jobs/DeploySystem/config.xml:105-107).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -202,12 +203,14 @@ def connected_components(
         n_edges = int(row["n"])
         est_bytes = n_edges * (float(row["pair_len"] or 0.0) + _EDGE_FIXED_OVERHEAD)
         if n_edges <= small_graph_threshold and est_bytes <= driver_collect_budget_bytes:
-            spark = e.sparkSession
             assign = _union_find_assign(
                 [(r["u"], r["v"]) for r in e.collect()]
             )
-            out = spark.createDataFrame(
-                list(assign.items()), "url string, cluster_id string"
+            # from pandas, the frame crosses as Arrow batches; a row list
+            # would run Python worker tasks to build it
+            out = e.sparkSession.createDataFrame(
+                pd.DataFrame(list(assign.items()), columns=["url", "cluster_id"]),
+                "url string, cluster_id string",
             )
             # edges now live in the driver dict; the checkpoint blocks
             # serve nothing — free them instead of leaking per call

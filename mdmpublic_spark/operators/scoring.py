@@ -15,9 +15,10 @@ Design for the 100 TB case:
     O(len²) metrics: pairs below ``gate`` skip Jaro-Winkler/Levenshtein
     entirely (they cannot reach the match threshold anyway). On skewed
     real data most candidate pairs die at the gate.
-  * **One Python crossing per pair.** A single pandas UDF returns the
-    full score struct; metrics are pure-Python/numpy (functions/
-    similarity.py) so scores are bit-stable across library versions.
+  * **One Python crossing per task.** A single pandas UDF returns the
+    set metrics and gated Jaro-Winkler (numpy and functions/
+    similarity.py, so scores are bit-stable across library versions);
+    Levenshtein and the weighted blend are JVM built-ins.
 
 Score = 0.10·tokenJaccard + 0.20·shingleJaccard
         + 0.35·shingleContainment + 0.25·JW(title) + 0.10·levRatio(title).
@@ -287,29 +288,56 @@ def page_features(
     )
 
 
-SET_SCHEMA = StructType(
-    [
-        StructField("jac_token", DoubleType()),
-        StructField("jac_shingle", DoubleType()),
-        StructField("cont_shingle", DoubleType()),
-    ]
-)
+# the metrics score_pairs takes from Python; Levenshtein and the blend stay in the JVM
+PAIR_METRICS_SCHEMA = StructType(SCORE_SCHEMA.fields[:4])
 
 
-def make_set_metrics_udf():
-    """Token/shingle set metrics over the pre-hashed sorted-distinct int32
-    feature arrays — one tight numpy loop per Arrow batch (searchsorted
-    merge-intersect, no per-row Python objects beyond the array views).
+def _jw_gated(ta: np.ndarray, tb: np.ndarray, need: np.ndarray) -> np.ndarray:
+    """Jaro-Winkler on (pre-lowered) title pairs where ``need`` is set,
+    0.0 elsewhere: pairs that failed the token-Jaccard gate cost a loop
+    iteration, nothing more. Equal titles short-circuit to 1.0 (=
+    jaro_winkler's exact value on equal strings); the rest go through
+    jaro_winkler_batch — the matrix-vectorized exact implementation (one
+    C-side row op per char instead of a Python inner loop; bit-identical
+    by construction and by fuzz test)."""
+    out = np.zeros(len(ta), dtype=np.float64)
+    sel_i, sel_a, sel_b = [], [], []
+    for i in range(len(ta)):
+        if need[i]:
+            a = ta[i] or ""
+            b = tb[i] or ""
+            if a == b:
+                out[i] = 1.0
+            else:
+                sel_i.append(i)
+                sel_a.append(a)
+                sel_b.append(b)
+    if sel_i:
+        out[np.asarray(sel_i)] = jaro_winkler_batch(sel_a, sel_b)
+    return out
+
+
+def make_pair_metrics_udf():
+    """The score stage's one Python crossing: token/shingle set metrics
+    over the pre-hashed sorted-distinct int32 feature arrays — one tight
+    numpy loop per Arrow batch (searchsorted merge-intersect, no per-row
+    Python objects beyond the array views) — plus Jaro-Winkler on the
+    lowered titles, the one metric with no Spark built-in (_jw_gated).
 
     Why not JVM ``array_intersect``: it builds a *boxed* hash set per row
     — measured 4,200 CPU core-seconds for 9.8M pairs at 32 cores (vs
     ~230 here), and the allocation churn anti-scales on a shared LLC.
-    The shingle metrics are only computed for pairs that pass the
-    token-Jaccard gate (same cascade as score_rows)."""
+    The shingle metrics and Jaro-Winkler are only computed for pairs that
+    pass the token-Jaccard gate (same cascade as score_rows)."""
 
-    @F.pandas_udf(SET_SCHEMA)
-    def set_metrics(
-        th_a: pd.Series, th_b: pd.Series, sh_a: pd.Series, sh_b: pd.Series
+    @F.pandas_udf(PAIR_METRICS_SCHEMA)
+    def pair_metrics(
+        th_a: pd.Series,
+        th_b: pd.Series,
+        sh_a: pd.Series,
+        sh_b: pd.Series,
+        ta: pd.Series,
+        tb: pd.Series,
     ) -> pd.DataFrame:
         tha, thb = th_a.to_numpy(), th_b.to_numpy()
         sha, shb = sh_a.to_numpy(), sh_b.to_numpy()
@@ -317,7 +345,6 @@ def make_set_metrics_udf():
         jt = np.empty(n, dtype=np.float64)
         js = np.zeros(n, dtype=np.float64)
         cs = np.zeros(n, dtype=np.float64)
-        ss, cnz = np.searchsorted, np.count_nonzero
         for i in range(n):
             a, b = tha[i], thb[i]
             la = 0 if a is None else a.size
@@ -327,11 +354,7 @@ def make_set_metrics_udf():
             elif la == 0 or lb == 0:
                 j = 0.0
             else:
-                if la > lb:
-                    a, b = b, a
-                idx = ss(b, a)
-                m = idx < b.size
-                inter = int(cnz(b[idx[m]] == a[m]))
+                inter = _inter_sorted(a, b)
                 j = inter / (la + lb - inter)
             jt[i] = j
             if j >= GATE:
@@ -341,46 +364,24 @@ def make_set_metrics_udf():
                 if sa == 0 and sb == 0:
                     js[i] = 1.0
                 elif sa and sb:
-                    if sa > sb:
-                        a, b = b, a
-                    idx = ss(b, a)
-                    m = idx < b.size
-                    inter = int(cnz(b[idx[m]] == a[m]))
+                    inter = _inter_sorted(a, b)
                     js[i] = inter / (sa + sb - inter)
                     cs[i] = inter / min(sa, sb)
-        return pd.DataFrame({"jac_token": jt, "jac_shingle": js, "cont_shingle": cs})
+        jw = _jw_gated(ta.to_numpy(), tb.to_numpy(), jt >= GATE)
+        return pd.DataFrame(
+            {"jac_token": jt, "jac_shingle": js, "cont_shingle": cs, "jw_title": jw}
+        )
 
-    return set_metrics
+    return pair_metrics
 
 
 def make_jw_udf():
-    """Jaro-Winkler on (pre-lowered) title pairs — the ONE metric with no
-    Spark built-in. ``need`` gates the work per row: pairs that failed the
-    token-Jaccard gate cost a loop iteration, nothing more. Equal titles
-    short-circuit to 1.0 (= jaro_winkler's exact value on equal strings);
-    the rest go through jaro_winkler_batch — the matrix-vectorized exact
-    implementation (one C-side row op per char instead of a Python inner
-    loop; bit-identical by construction and by fuzz test)."""
+    """Jaro-Winkler alone, (ta, tb, need) → double: the score stage's
+    gated title arm (_jw_gated) for callers without feature arrays."""
 
     @F.pandas_udf(DoubleType())
     def jw_title(ta: pd.Series, tb: pd.Series, need: pd.Series) -> pd.Series:
-        tan, tbn, nd = ta.to_numpy(), tb.to_numpy(), need.to_numpy()
-        n = len(tan)
-        out = np.zeros(n, dtype=np.float64)
-        sel_i, sel_a, sel_b = [], [], []
-        for i in range(n):
-            if nd[i]:
-                a = tan[i] or ""
-                b = tbn[i] or ""
-                if a == b:
-                    out[i] = 1.0
-                else:
-                    sel_i.append(i)
-                    sel_a.append(a)
-                    sel_b.append(b)
-        if sel_i:
-            out[np.asarray(sel_i)] = jaro_winkler_batch(sel_a, sel_b)
-        return pd.Series(out)
+        return pd.Series(_jw_gated(ta.to_numpy(), tb.to_numpy(), need.to_numpy()))
 
     return jw_title
 
@@ -423,11 +424,12 @@ def score_pairs(
     strings) and only ~24 µs the set intersections. JVM
     ``array_intersect`` is NOT the answer — its boxed per-row hash sets
     measured 4,200 CPU core-s for 9.8M pairs and anti-scale on a shared
-    LLC. So: set metrics in a numpy searchsorted UDF
-    (make_set_metrics_udf), **Levenshtein via the ``levenshtein``
-    built-in** (char-array DP in the JVM, gated + equal-title
-    short-circuited), Jaro-Winkler in a narrow title-only UDF
-    (make_jw_udf). Numerics are unchanged: same integer cardinalities,
+    LLC. So: set metrics (numpy searchsorted) and gated Jaro-Winkler
+    in ONE pandas UDF (make_pair_metrics_udf) — each Python crossing is
+    a worker launch per task, so the stage pays it once — and
+    **Levenshtein via the ``levenshtein`` built-in** (char-array DP in
+    the JVM, gated + equal-title short-circuited), with the weighted
+    blend JVM-side too. Numerics are unchanged: same integer cardinalities,
     same IEEE division order, same left-to-right weighted sum
     (tests/test_tables_and_pairs.py::test_jvm_scoring_bit_equals_python_udf
     pins bit-equality against the reference UDF)."""
@@ -454,8 +456,7 @@ def score_pairs(
             / F.greatest(F.length("_ta"), F.length("_tb")).cast("double")
         )
     )
-    set_udf = make_set_metrics_udf()
-    jw_udf = make_jw_udf()
+    metrics_udf = make_pair_metrics_udf()
     joined = (
         pairs.join(fa.hint("shuffle_hash"), "url_a")
         .join(fb.hint("shuffle_hash"), "url_b")
@@ -495,16 +496,12 @@ def score_pairs(
     if cos_term is not None:
         blend = blend + cos_term
     scored = (
-        joined
-        # Python crossing 1: the feature arrays go in, three doubles come
-        # out — the arrays never ride past this node
-        .withColumn("m", set_udf("th_a", "th_b", "shh_a", "shh_b"))
-        .select(
-            "url_a", "url_b", "m.*", ta.alias("_ta"), tb.alias("_tb"), *extra_cols
-        )
-        # Python crossing 2: Jaro-Winkler on two short lowered titles,
-        # skipped per-row for pairs that failed the token gate
-        .withColumn("jw_title", jw_udf("_ta", "_tb", gated))
+        joined.withColumn("_ta", ta).withColumn("_tb", tb)
+        # the one Python crossing: the feature arrays and lowered titles
+        # go in, the set metrics and gated Jaro-Winkler come out — the
+        # arrays never ride past this node
+        .withColumn("m", metrics_udf("th_a", "th_b", "shh_a", "shh_b", "_ta", "_tb"))
+        .select("url_a", "url_b", "m.*", "_ta", "_tb", *extra_cols)
         .withColumn("lev_title", lv)
         .select(
             "url_a",

@@ -41,6 +41,7 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 SNAPSHOT_LOG = "_snapshots.json"
 
@@ -52,6 +53,9 @@ class Snapshot:
     ts: float
     row_count: int
     data_dirs: list[str] = field(default_factory=list)  # dirs visible at this snapshot
+    # the schema a parquet read of data_dirs reports (StructType JSON);
+    # None — older logs, or appends of differing schemas — means infer
+    schema: str | None = None
 
 
 class Table:
@@ -92,6 +96,17 @@ class Table:
     def _commit(self, snap: Snapshot) -> None:
         self._write_log(self.history() + [snap])
 
+    def _snapshot(self, snapshot_id: int | None) -> Snapshot:
+        snaps = self.history()
+        if not snaps:
+            raise FileNotFoundError(f"table {self.path} has no snapshots")
+        if snapshot_id is None:
+            return snaps[-1]
+        for s in snaps:
+            if s.snapshot_id == snapshot_id:
+                return s
+        raise KeyError(f"table {self.path} has no snapshot {snapshot_id}")
+
     # --- writes ---
 
     def file_row_counts(self, snapshot_id: int | None = None) -> list[int]:
@@ -100,10 +115,7 @@ class Table:
         jobs. One file ≙ one write task ≙ one partition."""
         import pyarrow.parquet as pq
 
-        snaps = self.history()
-        snap = snaps[-1] if snapshot_id is None else next(
-            s for s in snaps if s.snapshot_id == snapshot_id
-        )
+        snap = self._snapshot(snapshot_id)
         counts: list[int] = []
         for d in snap.data_dirs:
             full = os.path.join(self.path, d)
@@ -112,7 +124,7 @@ class Table:
                     counts.append(pq.read_metadata(os.path.join(full, name)).num_rows)
         return counts
 
-    def _write_data(self, df: DataFrame) -> tuple[str, int]:
+    def _write_data(self, df: DataFrame) -> tuple[str, int, str]:
         import pyarrow.parquet as pq
 
         snap_dir = f"data-{uuid.uuid4().hex[:12]}"
@@ -124,22 +136,25 @@ class Table:
             for f in os.listdir(full)
             if f.endswith(".parquet")
         )
-        return snap_dir, n
+        # a parquet read reports every column nullable; recording that
+        # form lets read() skip the one-task schema-inference job
+        return snap_dir, n, df._jdf.schema().asNullable().json()
 
     def overwrite(self, df: DataFrame) -> Snapshot:
-        d, n = self._write_data(df)
+        d, n, schema = self._write_data(df)
         snap = Snapshot(
             snapshot_id=(self.current_snapshot_id() or 0) + 1,
             operation="overwrite",
             ts=time.time(),
             row_count=n,
             data_dirs=[d],
+            schema=schema,
         )
         self._commit(snap)
         return snap
 
     def append(self, df: DataFrame) -> Snapshot:
-        d, n = self._write_data(df)
+        d, n, schema = self._write_data(df)
         cur = self.current()
         dirs = (cur.data_dirs if cur else []) + [d]
         total = (cur.row_count if cur else 0) + n
@@ -149,6 +164,7 @@ class Table:
             ts=time.time(),
             row_count=total,
             data_dirs=dirs,
+            schema=schema if cur is None or cur.schema == schema else None,
         )
         self._commit(snap)
         return snap
@@ -228,11 +244,8 @@ class Table:
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         """Read the table at its current (or a given) snapshot — time travel."""
-        snaps = self.history()
-        if not snaps:
-            raise FileNotFoundError(f"table {self.path} has no snapshots")
-        snap = snaps[-1] if snapshot_id is None else next(
-            s for s in snaps if s.snapshot_id == snapshot_id
-        )
+        snap = self._snapshot(snapshot_id)
         paths = [os.path.join(self.path, d) for d in snap.data_dirs]
-        return spark.read.parquet(*paths)
+        if snap.schema is None:
+            return spark.read.parquet(*paths)
+        return spark.read.schema(StructType.fromJson(json.loads(snap.schema))).parquet(*paths)

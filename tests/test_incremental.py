@@ -147,6 +147,65 @@ def test_recaptured_urls_moved_cluster(spark, inc):
     assert mismatched == 0
 
 
+def test_tables_record_their_read_schema(spark, inc, tmp_path):
+    """Every table of a run + recapture fold (metrics appends included)
+    and a table rebuilt by backup.restore record the schema a parquet
+    read of their data dirs reports, so Table.read plans with no Spark
+    job; a log entry written without the field still reads by inference."""
+    import json
+    import shutil
+    import time
+
+    from mdmpublic_spark.backup import BackupManager
+    from mdmpublic_spark.tables import SNAPSHOT_LOG
+
+    wd = inc["wd_inc"]
+    tables = [
+        Table(os.path.join(wd, d))
+        for d in sorted(os.listdir(wd))
+        if os.path.exists(os.path.join(wd, d, SNAPSHOT_LOG))
+    ]
+    assert {"extract", "score", "cluster", "golden", "metrics"} <= {
+        os.path.basename(t.path) for t in tables
+    }
+    bk = BackupManager(str(tmp_path / "bk"))
+    bk.backup(Table(os.path.join(wd, "score")), "full")
+    tables.append(bk.restore(str(tmp_path / "restored")))
+
+    legacy = Table(str(tmp_path / "legacy"))
+    shutil.copytree(os.path.join(wd, "golden"), legacy.path, dirs_exist_ok=True)
+    with open(os.path.join(legacy.path, SNAPSHOT_LOG)) as f:
+        entries = [{k: v for k, v in e.items() if k != "schema"} for e in json.load(f)]
+    with open(os.path.join(legacy.path, SNAPSHOT_LOG), "w") as f:
+        json.dump(entries, f)
+    assert legacy.current().schema is None
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("read-with-schema", "Table.read of recorded schemas")
+        read_schemas = {t.path: t.read(spark).schema for t in tables}
+        sc.setJobGroup("read-legacy", "Table.read by inference")
+        legacy_schema = legacy.read(spark).schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed in order: once the inference job of the
+    # later read shows up, any job of the earlier reads would have too
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("read-legacy") and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("read-legacy")
+    assert tracker.getJobIdsForGroup("read-with-schema") == []
+
+    for t in tables:
+        assert t.current().schema is not None, t.path
+        dirs = [os.path.join(t.path, d) for d in t.current().data_dirs]
+        assert read_schemas[t.path] == spark.read.parquet(*dirs).schema, t.path
+    golden = Table(os.path.join(wd, "golden")).read(spark)
+    assert legacy_schema == golden.schema
+    assert legacy.read(spark).count() == golden.count()
+
+
 def test_incremental_rerun_is_noop(spark, inc):
     """Re-running a completed batch skips every stage and re-applies no
     merge: identical snapshots, ran == []."""

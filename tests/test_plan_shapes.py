@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -181,6 +182,10 @@ def test_score_features_join_is_shuffled_hash(spark):
     p = plan_of(scored)
     assert "ShuffledHashJoin" in p or "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
+    # score crosses into Python once: each Python node is a worker
+    # launch per task, so a second one would double the stage's fixed cost
+    nodes = re.findall(r"^\(\d+\) (\w+)", p, flags=re.M)
+    assert nodes.count("ArrowEvalPython") == 1, nodes
 
 
 def test_tail_n_is_take_ordered_not_global_window(spark, qs):

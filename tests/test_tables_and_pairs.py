@@ -8,6 +8,7 @@ import os
 import random
 import string
 
+import pytest
 from pyspark.sql import functions as F
 
 from mdmpublic_spark.functions.hashing import spark_hash32
@@ -45,6 +46,45 @@ def test_delete_where_and_null_semantics(spark, tmp_path):
     # pre-delete state is still time-travelable
     old = {r["id"] for r in t.read(spark, snapshot_id=1).collect()}
     assert old == {1, 2, 3, 4}
+
+
+def test_unknown_snapshot_id_raises_key_error(spark, tmp_path):
+    """An unknown snapshot id names the table and the id instead of
+    escaping as a bare StopIteration."""
+    t = Table(str(tmp_path / "t"))
+    t.overwrite(spark.range(3).toDF("v"))
+    for call in (lambda: t.read(spark, snapshot_id=7), lambda: t.file_row_counts(7)):
+        with pytest.raises(KeyError, match=r"has no snapshot 7") as err:
+            call()
+        assert t.path in str(err.value)
+    assert t.read(spark, snapshot_id=1).count() == 3 and t.file_row_counts(1)
+
+
+def test_metrics_flush_keeps_schema(spark, tmp_path):
+    """MetricsSink.flush builds its frame from pandas (Arrow); the rows
+    it appends keep METRICS_SCHEMA and the values they were given."""
+    import time
+
+    from mdmpublic_spark.metrics import METRICS_SCHEMA, MetricsSink
+
+    sink = MetricsSink(str(tmp_path / "metrics"), "run-1")
+    t0 = time.time()
+    sink.add("score", "rows", 12)
+    sink.add("score", "partition_rows", 5, partition_id=3)
+    sink.flush(spark)
+    sink.add("cluster", "cc_rounds", 0.5)
+    sink.flush(spark)
+    df = sink.read(spark)
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in METRICS_SCHEMA
+    ]
+    rows = df.orderBy("stage", "key").collect()
+    assert [(r.run_id, r.stage, r.partition_id, r.key, r.value) for r in rows] == [
+        ("run-1", "cluster", -1, "cc_rounds", 0.5),
+        ("run-1", "score", 3, "partition_rows", 5.0),
+        ("run-1", "score", -1, "rows", 12.0),
+    ]
+    assert all(abs(r.ts.timestamp() - t0) < 60 for r in rows)
 
 
 def test_expire_snapshots_drops_old_data(spark, tmp_path):
@@ -125,6 +165,16 @@ def test_cc_union_find_equals_distributed(spark):
     a = {(r["url"], r["cluster_id"]) for r in fast.collect()}
     b = {(r["url"], r["cluster_id"]) for r in dist.collect()}
     assert a == b
+
+    # an empty edge set: the union-find frame (built from pandas) keeps
+    # the distributed path's schema and, like it, has no rows
+    empty = spark.createDataFrame([], "src string, dst string")
+    fast, r_fast = connected_components(empty)
+    dist, _ = connected_components(empty, small_graph_threshold=0)
+    assert r_fast == 0
+    assert fast.schema.simpleString() == "struct<url:string,cluster_id:string>"
+    assert fast.schema == dist.schema
+    assert fast.collect() == dist.collect() == []
 
 
 def test_cc_driver_collect_budget_is_bytes_aware(spark):
