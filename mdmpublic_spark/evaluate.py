@@ -12,7 +12,7 @@ url + one count aggregate); nothing is collected but the four scalars.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def pairwise_scores(labeled: DataFrame, clustered: DataFrame) -> dict:
@@ -43,11 +43,3 @@ def pairwise_scores(labeled: DataFrame, clustered: DataFrame) -> dict:
         "recall": recall,
         "f1": f1,
     }
-
-
-def evaluate_run(spark: SparkSession, corpus_dir: str, golden_table_path: str) -> dict:
-    from mdmpublic_spark.tables import Table
-
-    labeled = spark.read.parquet(f"{corpus_dir}/labeled_pairs.parquet")
-    clustered = Table(golden_table_path).read(spark).select("url", "cluster_id")
-    return pairwise_scores(labeled, clustered)

@@ -19,12 +19,11 @@ import hashlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType
+from pyspark.sql.types import ArrayType, LongType
 
-# Mersenne prime 2^61-1 — classic universal-hash modulus; fits products of
-# 61-bit values in uint128-free numpy via Python ints? No — we stay in uint64
-# with wrapping multiply + xor-fold, which is well-defined in numpy and
-# deterministic across platforms.
+# All signature arithmetic is numpy uint64 with wraparound (no modulus):
+# well-defined and identical on every platform, and it sidesteps Spark's
+# ANSI overflow checks by staying out of SQL.
 _U64 = np.uint64
 
 NUM_PERM = 64  # minhash signature length
@@ -58,9 +57,9 @@ def _hash64_str(s: str) -> int:
 
 
 def minhash_signature_u64(h: np.ndarray) -> list[int]:
-    """64-permutation MinHash signature of a pre-hashed shingle set
-    (uint64 element hashes) — (a·h + b) with uint64 wraparound, min over
-    shingles per permutation; returned as a signed-int64 list for Spark
+    """64-permutation MinHash signature of a pre-hashed set (uint64
+    element hashes) — (a·h + b) with uint64 wraparound, min over the
+    elements per permutation; returned as a signed-int64 list for Spark
     LongType."""
     if h.size == 0:
         return [0] * NUM_PERM
@@ -68,28 +67,14 @@ def minhash_signature_u64(h: np.ndarray) -> list[int]:
     return sig.astype(np.int64).tolist()
 
 
-def minhash_signature(shingle_list: list[str]) -> list[int]:
-    """64-permutation MinHash signature of a shingle set (as int64 list)."""
-    if not shingle_list:
-        return [0] * NUM_PERM
-    h = np.fromiter((_hash64_str(s) for s in shingle_list), dtype=_U64, count=len(shingle_list))
-    return minhash_signature_u64(h)
-
-
-def lsh_band_keys(sig: list[int], n_bands: int = LSH_BANDS, n_rows: int = LSH_ROWS) -> list[str]:
-    """LSH band keys: ``n_bands`` bands of ``n_rows`` signature slots each
-    (default 21×3, see LSH_BANDS above), rendered as strings with the band
-    index prefixed so bands never collide across positions."""
-    return [
-        f"b{band}:" + "-".join(str(v) for v in sig[band * n_rows : (band + 1) * n_rows])
-        for band in range(n_bands)
-    ]
-
-
 def band_keys_expr(sig_col, n_bands: int = LSH_BANDS, n_rows: int = LSH_ROWS):
-    """JVM-side equivalent of ``lsh_band_keys`` over an array<long> signature
-    column — transform/slice/concat_ws stay inside whole-stage codegen, so
-    banding costs no Python crossing (the signature UDF is the only one)."""
+    """LSH band keys of an array<long> signature column: ``n_bands``
+    bands of ``n_rows`` slots each (default 21×3, see LSH_BANDS above),
+    rendered ``"b{band}:" + "-".join(str(v) for v in slots)`` with the
+    band index prefixed so bands never collide across positions. Signed
+    longs cast to string exactly as Python's ``str(int)`` renders them.
+    transform/slice/concat_ws stay inside whole-stage codegen, so banding
+    costs no Python crossing (the signature UDF is the only one)."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(n_bands - 1)),
         lambda band: F.concat(
@@ -105,10 +90,6 @@ def band_keys_expr(sig_col, n_bands: int = LSH_BANDS, n_rows: int = LSH_ROWS):
             ),
         ),
     )
-
-
-def band_count() -> int:
-    return LSH_BANDS
 
 
 def _hash64_sha256(s: str) -> int:
@@ -142,52 +123,6 @@ def simhash64(tokens: list[str]) -> int:
     return v - (1 << 64) if v >= 1 << 63 else v  # to signed int64
 
 
-_M32 = 0xFFFFFFFF
-
-
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def _mix_k1(k1: int) -> int:
-    k1 = (k1 * 0xCC9E2D51) & _M32
-    k1 = _rotl32(k1, 15)
-    return (k1 * 0x1B873593) & _M32
-
-
-def _mix_h1(h1: int, k1: int) -> int:
-    h1 ^= k1
-    h1 = _rotl32(h1, 13)
-    return (h1 * 5 + 0xE6546B64) & _M32
-
-
-def spark_hash32(s: str, seed: int = 42) -> int:
-    """Spark's ``F.hash()`` of a string column, reproduced driver-side:
-    Murmur3 x86_32 over the UTF-8 bytes with Spark's byte-wise tail mix
-    (each trailing byte is mixed as its own signed-int block, unlike
-    reference Murmur3) and default seed 42. Lets driver code pre-hash
-    small lookup sets (e.g. stop shingles) into int32 plan literals that
-    compare equal to JVM-hashed columns — no Spark job, no string
-    literals in the plan. Parity is pinned by a test against F.hash."""
-    data = s.encode("utf-8")
-    h1 = seed & _M32
-    n_aligned = len(data) - len(data) % 4
-    for i in range(0, n_aligned, 4):
-        block = int.from_bytes(data[i : i + 4], "little")
-        h1 = _mix_h1(h1, _mix_k1(block))
-    for i in range(n_aligned, len(data)):
-        b = data[i]
-        b = b - 256 if b >= 128 else b  # Spark mixes *signed* tail bytes
-        h1 = _mix_h1(h1, _mix_k1(b & _M32))
-    h1 ^= len(data)
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & _M32
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & _M32
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= 1 << 31 else h1  # to signed int32
-
-
 def rolling_fingerprint(text: str, window: int = 8, keep: int = 4) -> list[int]:
     """Winnowing-style document fingerprint: rolling hash over byte windows,
     keep the `keep` smallest window hashes (deterministic, order-free)."""
@@ -209,26 +144,18 @@ def rolling_fingerprint(text: str, window: int = 8, keep: int = 4) -> list[int]:
 
 
 @F.pandas_udf(ArrayType(LongType()))
-def minhash_sig(shingle_col: pd.Series) -> pd.Series:
-    return shingle_col.map(lambda sh: minhash_signature(list(sh)))
-
-
-@F.pandas_udf(ArrayType(LongType()))
-def minhash_sig_hashed(h_col: pd.Series) -> pd.Series:
-    """Signature from JVM-hashed shingles (array<long> of xxhash64 values,
-    reinterpreted as uint64). The Arrow crossing carries only int64
-    arrays — no per-shingle string materialization — and the whole body
-    is numpy; this is the hot-path variant used by blocking."""
+def minhash_sig(h_col: pd.Series) -> pd.Series:
+    """The one MinHash signature kernel: array<long> of JVM-computed
+    xxhash64 set elements (shingle or token ids, reinterpreted as uint64)
+    → 64 int64 signature slots. The Arrow crossing carries only int64
+    arrays, never a string, and the body is one numpy broadcast per row;
+    banding stays JVM-side (``band_keys_expr``). An empty set yields all
+    zeros, so callers that must not bucket empty sets mask them."""
     return h_col.map(
         lambda arr: minhash_signature_u64(
             np.asarray(arr, dtype=np.int64).view(_U64)
         )
     )
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def lsh_keys(sig_col: pd.Series) -> pd.Series:
-    return sig_col.map(lambda s: lsh_band_keys(list(s)))
 
 
 @F.pandas_udf(LongType())

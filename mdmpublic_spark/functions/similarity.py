@@ -12,15 +12,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def jaccard_tokens(a: list[str] | set[str], b: list[str] | set[str]) -> float:
-    sa, sb = set(a), set(b)
-    if not sa and not sb:
-        return 1.0
-    inter = len(sa & sb)
-    union = len(sa) + len(sb) - inter
-    return inter / union if union else 0.0
-
-
 def jaro(a: str, b: str) -> float:
     la, lb = len(a), len(b)
     if la == 0 and lb == 0:

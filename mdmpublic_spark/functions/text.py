@@ -17,7 +17,7 @@ import re
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 # --- pure string functions (usable from both the generator and the UDFs) ---
 
@@ -37,8 +37,6 @@ _ENTITIES = {
     "&apos;": "'",
 }
 
-_TOKEN_RE = re.compile(r"[a-z0-9]+")
-
 
 def extract_text_str(html: str) -> str:
     """HTML → visible text. Pure, byte-deterministic."""
@@ -48,10 +46,6 @@ def extract_text_str(html: str) -> str:
     for ent, rep in _ENTITIES.items():
         s = s.replace(ent, rep)
     return _WS_RE.sub(" ", s).strip()
-
-
-def extract_text_bytes(html: bytes) -> str:
-    return extract_text_str(html.decode("utf-8", errors="replace"))
 
 
 _TITLE_RE = re.compile(r"<title[^>]*>(.*?)</title\s*>", re.S | re.I)
@@ -76,32 +70,7 @@ def extract_title_bytes(html: bytes) -> str:
     return extract_title_str(html.decode("utf-8", errors="replace"))
 
 
-def normalize_str(text: str) -> str:
-    """Matching canonicalization: lowercase + alnum-token stream."""
-    return " ".join(_TOKEN_RE.findall(text.lower()))
-
-
-def tokens_str(text: str) -> list[str]:
-    return _TOKEN_RE.findall(text.lower())
-
-
-def shingles_str(text: str, k: int = 3) -> list[str]:
-    """k-word shingles of the normalized token stream (deduped, order kept)."""
-    toks = tokens_str(text)
-    if len(toks) < k:
-        return [" ".join(toks)] if toks else []
-    seen: dict[str, None] = {}
-    for i in range(len(toks) - k + 1):
-        seen.setdefault(" ".join(toks[i : i + k]), None)
-    return list(seen.keys())
-
-
 # --- vectorized (Arrow) UDFs ---
-
-
-@F.pandas_udf(StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    return html.map(extract_text_bytes)
 
 
 @F.pandas_udf(StringType())
@@ -126,67 +95,16 @@ def extract_page(html: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"text": list(text), "title": list(title)})
 
 
-@F.pandas_udf(StringType())
-def normalize_text(text: pd.Series) -> pd.Series:
-    return text.map(normalize_str)
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def shingles(text: pd.Series) -> pd.Series:
-    return text.map(shingles_str)
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def text_tokens(text: pd.Series) -> pd.Series:
-    return text.map(tokens_str)
-
-
-@F.pandas_udf(LongType())
-def token_count(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: len(_TOKEN_RE.findall(t.lower())))
-
-
 # --- native-function helpers (JVM-side, codegen'd — preferred hot path) ---
 
 
 def tokens_expr(text_col, max_tokens: int | None = None):
-    """JVM tokenization, equivalent to ``tokens_str``: lowercase, split on
-    non-alnum runs, drop empties (split/filter/slice stay in codegen)."""
+    """JVM tokenization: lowercase, split on non-alnum runs, drop empties
+    (split/filter/slice stay in codegen)."""
     toks = F.filter(
         F.split(F.lower(text_col), "[^a-z0-9]+"), lambda t: t != F.lit("")
     )
     return F.slice(toks, 1, max_tokens) if max_tokens else toks
-
-
-def shingles_from_tokens(toks_attr):
-    """3-word shingles (distinct) of a **materialized** token-array column.
-
-    ``toks_attr`` MUST be a plain column reference, not a composite
-    expression: ``F.get(expr, i)`` inside the transform lambda re-evaluates
-    ``expr`` per element — O(n²) per row (measured 10x stage blowup).
-    Project the token array into its own select first; a multiply-
-    referenced non-trivial alias survives CollapseProject.
-
-    Matches ``shingles_str`` semantics: n<3 → the whole token stream as
-    one shingle; empty → empty array."""
-    n = F.size(toks_attr)
-    sh = (
-        F.when(
-            n >= 3,
-            F.transform(
-                F.sequence(F.lit(0), n - 3),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.get(toks_attr, i),
-                    F.get(toks_attr, i + 1),
-                    F.get(toks_attr, i + 2),
-                ),
-            ),
-        )
-        .when(n > 0, F.array(F.concat_ws(" ", toks_attr)))
-        .otherwise(F.array().cast("array<string>"))
-    )
-    return F.array_distinct(sh)
 
 
 def token_hashes_expr(toks_attr):
@@ -201,17 +119,24 @@ def shingle_hashes_from_token_hashes(th_attr):
     **materialized** token-hash array (see ``token_hashes_expr``) — no
     shingle string is ever built and no token string is hashed twice.
 
-    ``xxhash64(h_i, h_{i+1}, h_{i+2})`` chains the three 8-byte token
-    hashes (no concat ambiguity — tokens hash individually). The
-    string-shingle variant left profile/block/features allocation-bound
-    at 32 local cores (GC-limited, near-zero 8→32 scaling at 800k
-    pages); this keeps the whole map side in primitive longs. Same n<3
-    fallback as ``shingles_from_tokens``: the whole token stream as one
-    shingle (chain of all its hashes, here n ∈ {1,2}); empty → empty.
+    ``th_attr`` MUST be a plain column reference, not a composite
+    expression: ``F.get(expr, i)`` inside the transform lambda
+    re-evaluates ``expr`` per element — O(n²) per row (measured 10x stage
+    blowup). Project the array into its own select first; a multiply-
+    referenced non-trivial alias survives CollapseProject.
 
-    Every consumer that must agree on shingle identity (the stop-shingle
-    profile, LSH blocking, scoring suppression) derives from THIS
-    function, so a shingle's 64-bit id has one definition everywhere.
+    ``xxhash64(h_i, h_{i+1}, h_{i+2})`` chains the three 8-byte token
+    hashes (no concat ambiguity — tokens hash individually). String
+    shingles left profile/block/features allocation-bound at 32 local
+    cores (GC-limited, near-zero 8→32 scaling at 800k pages); this keeps
+    the whole map side in primitive longs. n<3 → the whole token stream
+    as one shingle (chain of all its hashes, here n ∈ {1,2}); empty →
+    empty.
+
+    This is THE shingle identity: the stop-shingle profile, LSH
+    blocking, scoring suppression and the near-dup shingle sketch and
+    verify (operators/dedup.py) all derive from this function, so a
+    shingle's 64-bit id has one definition everywhere.
     """
     n = F.size(th_attr)
     return F.array_distinct(

@@ -12,11 +12,12 @@ cannot reach F1 ≥ 0.99 recall):
   * ``d:{normalized domain}`` — cheap, computed JVM-side (parse_url +
     regexp_replace stay inside whole-stage codegen; zero Python cost).
     Catches the common case of same-site near-duplicates.
-  * ``b{i}:{band hash}`` — MinHash-LSH band keys over 3-word shingles of
-    the normalized text; catches cross-domain duplicates. One Arrow
-    batch crossing per page: a single pandas UDF goes text → normalize →
-    shingle → 64-perm MinHash → 16 band keys (chaining separate UDFs
-    would serialize the row through Python four times).
+  * ``b{i}:{band hash}`` — MinHash-LSH band keys over the page's
+    stop-filtered 3-word shingles; catches cross-domain duplicates.
+    Tokenizing, shingling (as 64-bit hashed ids) and stop filtering run
+    JVM-side; the ``minhash_sig`` pandas UDF is the one Python crossing
+    (int64 arrays in, 64 int64 slots out); ``band_keys_expr`` renders
+    the 21 band keys JVM-side.
 
 Scale notes (100 TB): output is (url, block_key) — long and narrow.
 It is *not* repartitioned here; the pair join (operators/pairs.py) owns
@@ -28,12 +29,9 @@ broadcast + AQE skew split).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, StringType
 
-from mdmpublic_spark.functions.hashing import lsh_band_keys, minhash_signature_u64
+from mdmpublic_spark.functions.hashing import band_keys_expr, minhash_sig
 from mdmpublic_spark.functions.text import (
     norm_domain,
     shingle_hashes_from_token_hashes,
@@ -110,33 +108,6 @@ def common_shingles(
     )
 
 
-def make_lsh_udf():
-    """Factory: hashed-shingle-array (array<long> of xxhash64 values) →
-    LSH band keys, one Python crossing whose input is pure int64 — no
-    per-shingle string ever crosses Arrow, and the minhash body is one
-    numpy broadcast-multiply-min.
-
-    Shingling, hashing AND stop-filtering all happen JVM-side upstream
-    (tokens_expr → token_hashes_expr → shingle_hashes_from_token_hashes
-    → array_except with the profile's ids): one tokenizing code path feeds
-    both the stop profile and the signatures, so no Python-vs-Java
-    lowercase disagreement can leak boilerplate past the filter."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def lsh_keys_of_hashes(h_col: pd.Series) -> pd.Series:
-        def keys(arr) -> list[str]:
-            a = np.asarray(arr, dtype=np.int64)
-            # all-boilerplate page: no signal → no LSH keys (else every
-            # such page would collide into one pathological block)
-            if a.size == 0:
-                return []
-            return lsh_band_keys(minhash_signature_u64(a.view(np.uint64)))
-
-        return h_col.map(keys)
-
-    return lsh_keys_of_hashes
-
-
 def block_keys(
     pages: DataFrame,
     use_domain: bool = True,
@@ -151,6 +122,11 @@ def block_keys(
     signature UDF. Pages with empty/near-empty text get no LSH keys
     (their signatures would all collide into one pathological block —
     SURVEY.md §7.4 item 2); they remain reachable via the domain key.
+    A page whose shingles are all stop shingles gets no LSH keys either.
+    Shingling, hashing and stop filtering run JVM-side on the same
+    tokenizing path as the stop profile (``common_shingles``), so no
+    Python-vs-Java lowercase disagreement can leak boilerplate past the
+    filter.
     """
     out = None
     if use_domain:
@@ -159,7 +135,6 @@ def block_keys(
         ).where(F.col("block_key").isNotNull())
         out = dom
     if use_lsh:
-        lsh_udf = make_lsh_udf()
         sh_h = shingle_hashes_from_token_hashes(F.col("th"))
         if stop_hashes:
             # int64 array literal: 8 bytes per entry in the serialized
@@ -171,7 +146,19 @@ def block_keys(
             .select("url", tokens_expr(F.col("text")).alias("toks"))
             .select("url", token_hashes_expr(F.col("toks")).alias("th"))
             .select("url", sh_h.alias("sh_h"))
-            .select("url", F.explode(lsh_udf(F.col("sh_h"))).alias("block_key"))
+            # a pandas UDF cannot sit inside a higher-order function, so
+            # the signature gets its own column before banding
+            .select("url", "sh_h", minhash_sig(F.col("sh_h")).alias("sig"))
+            # empty shingle set (all-boilerplate page) → null → no keys.
+            # Kept as a projection: a .where(size > 0) here is pushed below
+            # the shingle transform and re-inlines th into each get() —
+            # O(n²) per page
+            .select(
+                "url",
+                F.explode(
+                    F.when(F.size("sh_h") > 0, band_keys_expr(F.col("sig")))
+                ).alias("block_key"),
+            )
         )
         out = lsh if out is None else out.unionByName(lsh)
     if out is None:

@@ -8,8 +8,10 @@ Four families over a document corpus (SURVEY.md §2 + task brief):
     prefix tokens → exact verify on candidates). No UDF, whole-stage
     codegen; the pair-generating join touches only each doc's rarest
     (1−t)·m tokens, and DF-capped postings bound the hot-token blowup.
-  * MinHash-LSH  — reuses the pipeline's banding (functions/hashing.py)
-    → band-bucket join → exact token-Jaccard verify on candidates only.
+  * MinHash-LSH  — the pipeline's signature kernel and JVM banding
+    (functions/hashing.py ``minhash_sig`` → ``band_keys_expr``) over
+    the pipeline's hashed shingle ids (or the token set) → band-bucket
+    join → exact Jaccard verify on candidates only.
   * SimHash      — 64-bit signature, 4×16-bit band bucketing (any pair
     within Hamming distance 3 shares ≥1 exact band by pigeonhole) →
     popcount verify. Bucket join + bit ops, all native after the
@@ -35,10 +37,13 @@ from mdmpublic_spark.functions.hashing import (
     LSH_ROWS,
     band_keys_expr,
     minhash_sig,
-    minhash_sig_hashed,
     simhash,
 )
-from mdmpublic_spark.functions.text import shingles_from_tokens, tokens_expr
+from mdmpublic_spark.functions.text import (
+    shingle_hashes_from_token_hashes,
+    token_hashes_expr,
+    tokens_expr,
+)
 
 TOKEN_RE = "[^a-z0-9]+"  # mirror of functions/text.py tokenization, SQL-safe
 
@@ -429,13 +434,17 @@ def fingerprint_pairs(
     )
 
 
-def shingled(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, text) → distinct (id, tok) 3-word-shingle posting rows,
-    built-ins only (tok column name kept so the verify join below is
-    shared between token and shingle modes)."""
-    return docs.select(
-        id_col, tokens_expr(F.col("text")).alias("toks")
-    ).select(id_col, F.explode(shingles_from_tokens(F.col("toks"))).alias("tok"))
+def _token_hashes(docs: DataFrame, id_col: str) -> DataFrame:
+    """(id, text) → (id, th): each doc's token hashes, materialized as a
+    plain column for ``shingle_hashes_from_token_hashes`` — the pipeline's
+    shingle identity. Callers apply that expression directly inside
+    ``explode``/``minhash_sig``, never via a projected attribute: Spark
+    infers ``size(a) > 0`` for ``explode(<attribute>)`` and pushes that
+    Filter below the projections, re-inlining ``th`` into every get() of
+    the shingle transform — O(n²) per doc."""
+    return docs.select(id_col, tokens_expr(F.col("text")).alias("toks")).select(
+        id_col, token_hashes_expr(F.col("toks")).alias("th")
+    )
 
 
 def minhash_lsh_candidates(
@@ -453,14 +462,14 @@ def minhash_lsh_candidates(
     IS truth∩emitted — bench.py's recall gate semi-joins against this
     instead of paying the posting-list verify join).
 
-    ``sketch``: ``"shingle"`` (3-word shingles, order-sensitive) or
+    ``sketch``: ``"shingle"`` (3-word shingle ids, order-sensitive) or
     ``"token"`` (distinct-token set, order-insensitive — catches
-    word-reordered duplicates; tokens are xxhash64'd JVM-side so the
-    signature UDF's Arrow crossing carries only int64 arrays)."""
+    word-reordered duplicates). Either set is xxhash64'd JVM-side, so the
+    signature UDF's Arrow crossing carries only int64 arrays."""
     if sketch == "token":
         sigs = docs.select(
             id_col,
-            minhash_sig_hashed(
+            minhash_sig(
                 F.transform(
                     F.array_distinct(tokens_expr(F.col("text"))),
                     lambda t: F.xxhash64(t),
@@ -468,13 +477,8 @@ def minhash_lsh_candidates(
             ).alias("sig"),
         )
     else:
-        # shingle arrays computed natively per doc (no shuffle): tokens
-        # must be materialized as a plain column before the shingle
-        # transform (see functions.text.shingles_from_tokens)
-        sigs = (
-            docs.select(id_col, tokens_expr(F.col("text")).alias("toks"))
-            .select(id_col, shingles_from_tokens(F.col("toks")).alias("sh"))
-            .select(id_col, minhash_sig(F.col("sh")).alias("sig"))
+        sigs = _token_hashes(docs, id_col).select(
+            id_col, minhash_sig(shingle_hashes_from_token_hashes(F.col("th"))).alias("sig")
         )
     banded = sigs.select(
         id_col, F.explode(band_keys_expr(F.col("sig"), n_bands, n_rows)).alias("band")
@@ -508,7 +512,7 @@ def minhash_lsh_pairs(
 
     ``sketch`` picks the set the MinHash signature estimates — i.e. what
     the CANDIDATE pass can see:
-      * ``"shingle"`` — 3-word shingles (default): word-ORDER-sensitive,
+      * ``"shingle"`` — 3-word shingle ids (default): word-ORDER-sensitive,
         the classic web near-dup sketch. Structurally blind to
         bag-of-words-identical documents with reordered words (their
         shingle Jaccard is ~0 even though token Jaccard is 1) — a gap
@@ -516,9 +520,9 @@ def minhash_lsh_pairs(
         token-Jaccard ≥ 0.95 edge set on the shuffled-word-order
         duplicate family.
       * ``"token"``   — the distinct-token SET: order-INSENSITIVE, so
-        reordered duplicates band-match. Tokens are xxhash64'd JVM-side
-        and the signature runs over int64 arrays (the hot-path
-        minhash_sig_hashed variant — no per-token string crossing).
+        reordered duplicates band-match.
+    Both sets reach the one ``minhash_sig`` kernel as JVM-hashed int64
+    arrays — no per-token or per-shingle string crosses into Python.
     Run both sketches and union the pair sets for an order-robust
     near-dup pass; each is one narrow map + one bucket join, so the
     second pass adds linear work, never quadratic.
@@ -535,11 +539,16 @@ def minhash_lsh_pairs(
         (queries/training_data.py uses it for BOTH sketches).
     """
     cand = minhash_lsh_candidates(docs, id_col, n_bands, n_rows, sketch)
-    # exact verify on candidates only; hash the verify key to int64 for
-    # the same shuffle-byte reason as _postings_jaccard (shingles are
-    # ~3 words of text each — the worst offenders as raw string keys)
-    toks = shingled(docs, id_col) if verify == "shingle" else tokenized(docs, id_col)
-    toks = toks.select(id_col, F.xxhash64("tok").alias("tok"))
+    # exact verify on candidates only, keyed on int64 for the same
+    # shuffle-byte reason as _postings_jaccard. The shingle postings are
+    # the very ids the shingle sketch signs, so sketch and verify count
+    # one set.
+    if verify == "shingle":
+        toks = _token_hashes(docs, id_col).select(
+            id_col, F.explode(shingle_hashes_from_token_hashes(F.col("th"))).alias("tok")
+        )
+    else:
+        toks = tokenized(docs, id_col).select(id_col, F.xxhash64("tok").alias("tok"))
     sizes = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_tok"))
     ta = toks.select(F.col(id_col).alias("id_a"), "tok")
     tb = toks.select(F.col(id_col).alias("id_b"), "tok")

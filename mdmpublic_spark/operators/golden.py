@@ -37,19 +37,3 @@ def golden_records(clustered: DataFrame, freshness_col: str = "warc_ts") -> Data
     return clustered.withColumn("rn", F.row_number().over(w)).withColumn(
         "is_golden", F.col("rn") == 1
     ).drop("rn")
-
-
-def cluster_summary(clustered: DataFrame) -> DataFrame:
-    """Flagship top-K query: largest duplicate clusters with examples —
-    the reference's top-K diagnosis shape (/root/reference/jenkins_scripts/
-    performance/diagnostic_jenkinsjob_slow/diagnostic_jenkinsjob_slow.py:88-92)."""
-    return (
-        clustered.groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.min("url").alias("example_url"),
-            F.max("warc_ts").alias("latest_ts"),
-        )
-        .where(F.col("n_pages") > 1)
-        .orderBy(F.desc("n_pages"), F.asc("cluster_id"))
-    )

@@ -27,9 +27,10 @@ Shingle **containment** (|A∩B| / min(|A|,|B|)) carries the largest
 weight because the dominant near-duplicate transformation on the web is
 *truncation* (one side is a prefix/subset of the other): plain Jaccard
 collapses for short truncated docs while containment stays high.
-Calibrated on the labeled fixtures (tools/calibrate.py): with
-stop-shingle suppression and real <title> comparison the score gap is
-positives ≥ 0.621 vs negatives ≤ 0.273; threshold 0.45 sits mid-gap,
+Calibrated on the labeled fixtures when the pipeline was first built
+(round 1, an offline string-shingle rescoring of every labeled pair):
+with stop-shingle suppression and real <title> comparison the score gap
+was positives ≥ 0.621 vs negatives ≤ 0.273; threshold 0.45 sits mid-gap,
 and cluster transitivity rescues outlier pairs whose neighbors chain.
 (tests/test_pipeline.py asserts pairwise F1 ≥ 0.99.)
 """
@@ -42,7 +43,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from mdmpublic_spark.functions.similarity import (
-    jaccard_tokens,
     jaro_winkler,
     jaro_winkler_batch,
     levenshtein_ratio,
@@ -67,72 +67,9 @@ SCORE_SCHEMA = StructType(
 
 W_TOKEN, W_SHINGLE, W_CONT, W_JW, W_LEV = 0.10, 0.20, 0.35, 0.25, 0.10
 GATE = 0.08  # token-jaccard below this cannot reach any sane threshold
-# calibrated via tools/calibrate.py: positives ≥ 0.621, negatives ≤ 0.273
-# (with stop-shingle suppression + real titles) — 0.45 sits mid-gap
+# round-1 calibration on the labeled fixtures: positives ≥ 0.621, negatives
+# ≤ 0.273 (with stop-shingle suppression + real titles) — 0.45 sits mid-gap
 DEFAULT_THRESHOLD = 0.45
-
-
-def _shingle_set(tokens: list[str], k: int = 3) -> set[str]:
-    if len(tokens) < k:
-        return {" ".join(tokens)} if tokens else set()
-    return {" ".join(tokens[i : i + k]) for i in range(len(tokens) - k + 1)}
-
-
-def score_rows(
-    title_a: str,
-    title_b: str,
-    toks_a: list[str],
-    toks_b: list[str],
-    stop: frozenset = frozenset(),
-) -> tuple[float, float, float, float, float, float]:
-    """Pure scoring of one pair (unit-testable without Spark)."""
-    jt = jaccard_tokens(toks_a, toks_b)
-    if jt < GATE:
-        # cascade short-circuit: cheap metric alone decides "no"
-        return (jt, 0.0, 0.0, 0.0, 0.0, W_TOKEN * jt)
-    sa, sb = _shingle_set(toks_a) - stop, _shingle_set(toks_b) - stop
-    inter = len(sa & sb)
-    union = len(sa) + len(sb) - inter
-    js = inter / union if union else (1.0 if not sa and not sb else 0.0)
-    cs = inter / min(len(sa), len(sb)) if sa and sb else 0.0
-    ta, tb = title_a.lower(), title_b.lower()
-    jw = jaro_winkler(ta, tb)
-    lv = levenshtein_ratio(ta, tb)
-    return (
-        jt,
-        js,
-        cs,
-        jw,
-        lv,
-        W_TOKEN * jt + W_SHINGLE * js + W_CONT * cs + W_JW * jw + W_LEV * lv,
-    )
-
-
-def _score_prepared(title_a, title_b, ts_a, sh_a, ts_b, sh_b):
-    """Score one pair from prepared (token-set, shingle-set) features."""
-    if not ts_a and not ts_b:
-        jt = 1.0
-    else:
-        i = len(ts_a & ts_b)
-        u = len(ts_a) + len(ts_b) - i
-        jt = i / u if u else 0.0
-    if jt < GATE:
-        return (jt, 0.0, 0.0, 0.0, 0.0, W_TOKEN * jt)
-    inter = len(sh_a & sh_b)
-    union = len(sh_a) + len(sh_b) - inter
-    js = inter / union if union else (1.0 if not sh_a and not sh_b else 0.0)
-    cs = inter / min(len(sh_a), len(sh_b)) if sh_a and sh_b else 0.0
-    ta, tb = title_a.lower(), title_b.lower()
-    jw = jaro_winkler(ta, tb)
-    lv = levenshtein_ratio(ta, tb)
-    return (
-        jt,
-        js,
-        cs,
-        jw,
-        lv,
-        W_TOKEN * jt + W_SHINGLE * js + W_CONT * cs + W_JW * jw + W_LEV * lv,
-    )
 
 
 def _inter_sorted(a, b) -> int:
@@ -149,11 +86,12 @@ def _inter_sorted(a, b) -> int:
 
 
 def _score_hashed(title_a, title_b, th_a, th_b, sh_a, sh_b):
-    """Score one pair from hashed (sorted-distinct int32) feature arrays.
+    """Score one pair from hashed (sorted-distinct int32) feature arrays —
+    the body of ``make_score_udf``, the reference the score stage is
+    pinned to bit for bit (tests: test_jvm_scoring_bit_equals_python_udf).
 
-    Numerically identical to _score_prepared: Jaccard/containment only
-    read set *cardinalities*, which hashing preserves (collision odds
-    within a ~10^2-element doc set are ~10^-6)."""
+    Jaccard/containment only read set *cardinalities*, which hashing
+    preserves (collision odds within a ~10^2-element doc set are ~10^-6)."""
     la, lb = th_a.size, th_b.size
     if la == 0 and lb == 0:
         jt = 1.0
@@ -328,7 +266,7 @@ def make_pair_metrics_udf():
     — measured 4,200 CPU core-seconds for 9.8M pairs at 32 cores (vs
     ~230 here), and the allocation churn anti-scales on a shared LLC.
     The shingle metrics and Jaro-Winkler are only computed for pairs that
-    pass the token-Jaccard gate (same cascade as score_rows)."""
+    pass the token-Jaccard gate (same cascade as _score_hashed)."""
 
     @F.pandas_udf(PAIR_METRICS_SCHEMA)
     def pair_metrics(

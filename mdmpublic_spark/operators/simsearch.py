@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import hashlib
 
-import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -302,19 +301,3 @@ def embedding_near_dup_pairs(
         .where(cosine_expr(F.col("va"), F.col("vb")) >= threshold)
         .select("id_a", "id_b")
     )
-
-
-def np_reference_topk(vectors: dict[int, list[float]], query_ids: list[int], k: int):
-    """Numpy oracle used by tests (exact cosine ranking)."""
-    ids = sorted(vectors)
-    M = np.array([vectors[i] for i in ids], dtype=np.float64)
-    M = M / np.linalg.norm(M, axis=1, keepdims=True)
-    out = {}
-    index = {i: r for r, i in enumerate(ids)}
-    for q in query_ids:
-        sims = M @ M[index[q]]
-        order = sorted(
-            (i for i in ids if i != q), key=lambda i: (-sims[index[i]], i)
-        )
-        out[q] = order[:k]
-    return out

@@ -61,7 +61,6 @@ class PipelineConfig:
     # given the same frozen profile is the incremental path's equivalence
     # oracle (tests/test_incremental.py). None = profile this corpus.
     frozen_profile: str | None = None
-    extra: dict = field(default_factory=dict)
 
 
 def run_pipeline(

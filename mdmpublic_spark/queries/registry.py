@@ -189,16 +189,3 @@ def components() -> dict[str, QueryFn]:
     out["er_golden_records"] = golden_records_exact
     out["er_link_sources"] = link_sources
     return out
-
-
-def component_oracles() -> dict[str, str]:
-    """Oracles for the pre-merge components (tests/test_oracle_parity
-    checks these too, so each family stays individually diagnosable)."""
-    out: dict[str, str] = {}
-    for mod in (relational, training_data, ops_sources, coverage, cleaning):
-        out.update(mod.ORACLES)
-    out["er_cluster_summary_exact"] = CLUSTER_SUMMARY_EXACT_ORACLE
-    out["er_cc_jaccard_clusters"] = CC_JACCARD_ORACLE
-    out["er_golden_records"] = GOLDEN_RECORDS_ORACLE
-    out["er_link_sources"] = LINK_SOURCES_ORACLE
-    return out

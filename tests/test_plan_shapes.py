@@ -188,6 +188,49 @@ def test_score_features_join_is_shuffled_hash(spark):
     assert nodes.count("ArrowEvalPython") == 1, nodes
 
 
+def _assert_no_transform_filter(p: str) -> None:
+    conditions = re.findall(
+        r"^\(\d+\) Filter\b.*?^Condition : (.*?)$", p, flags=re.M | re.S
+    )
+    assert conditions, p
+    assert not [c for c in conditions if "transform(" in c], conditions
+
+
+def test_lsh_block_keys_one_python_node_no_transform_filter(spark):
+    """The LSH branch of block_keys crosses into Python once (the
+    signature UDF; banding is JVM-side), and its empty-shingle-set mask
+    stays a projection: a Filter over the shingle array is pushed below
+    the projections and re-inlines the token hashes into every get() of
+    the shingle transform — O(n²) per page."""
+    from mdmpublic_spark.operators.blocking import block_keys
+
+    pages = (
+        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        .select(
+            F.concat(F.lit("u"), F.col("doc_id").cast("string")).alias("url"),
+            F.col("text"),
+        )
+        .limit(200)
+    )
+    p = plan_of(block_keys(pages, use_domain=False, stop_hashes=[3, 1, 2]))
+    nodes = re.findall(r"^\(\d+\) (\w+)", p, flags=re.M)
+    assert nodes.count("ArrowEvalPython") == 1, nodes
+    _assert_no_transform_filter(p)
+
+
+def test_minhash_shingle_arm_no_transform_filter(spark):
+    """Same O(n²) guard for the near-dup shingle sketch and verify: Spark
+    infers ``size(a) > 0`` for an ``explode`` of a plain attribute and
+    pushes it below the shingle transform, so the shingle ids must be
+    exploded as an expression."""
+    from mdmpublic_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("doc_id", "text")
+    _assert_no_transform_filter(
+        plan_of(minhash_lsh_pairs(docs, n_bands=64, n_rows=1, verify="shingle"))
+    )
+
+
 def test_tail_n_is_take_ordered_not_global_window(spark, qs):
     """W5 tail-N must plan as TakeOrderedAndProject (per-partition top-N,
     driver merge of N rows) — NOT a row_number() over an unpartitioned

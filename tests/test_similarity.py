@@ -2,18 +2,20 @@
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mdmpublic_spark.functions.hashing import (
-    lsh_band_keys,
-    minhash_signature,
+    NUM_PERM,
+    minhash_signature_u64,
     rolling_fingerprint,
     simhash64,
 )
 from mdmpublic_spark.functions.similarity import (
     hamming64,
-    jaccard_tokens,
     jaro_winkler,
     levenshtein,
     levenshtein_ratio,
@@ -52,17 +54,20 @@ def test_jaro_winkler_known():
     assert jaro_winkler("a", "") == 0.0
 
 
-def test_jaccard():
-    assert jaccard_tokens(["a", "b"], ["b", "c"]) == 1 / 3
-    assert jaccard_tokens([], []) == 1.0
-    assert jaccard_tokens(["a"], []) == 0.0
+def _hashed(ids) -> np.ndarray:
+    """Set elements as the signature kernel sees them: uniform 64-bit
+    hashes (the JVM's signed xxhash64 output, reinterpreted as uint64)."""
+    return np.asarray(
+        [int.from_bytes(hashlib.sha256(str(i).encode()).digest()[:8], "big") for i in ids],
+        dtype=np.uint64,
+    )
 
 
 def test_minhash_similarity_tracks_jaccard():
-    base = [f"tok{i}" for i in range(100)]
-    near = base[:90] + [f"other{i}" for i in range(10)]
-    far = [f"zzz{i}" for i in range(100)]
-    s0, s1, s2 = (minhash_signature(x) for x in (base, near, far))
+    base = list(range(100))
+    near = base[:90] + list(range(1000, 1010))
+    far = list(range(2000, 2100))
+    s0, s1, s2 = (minhash_signature_u64(_hashed(x)) for x in (base, near, far))
     agree_near = sum(a == b for a, b in zip(s0, s1)) / len(s0)
     agree_far = sum(a == b for a, b in zip(s0, s2)) / len(s0)
     assert agree_near > 0.6  # true jaccard ≈ 0.82
@@ -70,10 +75,11 @@ def test_minhash_similarity_tracks_jaccard():
 
 
 def test_minhash_deterministic_and_order_free():
-    a = minhash_signature(["x", "y", "z"])
-    b = minhash_signature(["z", "x", "y"])
-    assert a == b
-    assert len(lsh_band_keys(a)) == 21
+    a = minhash_signature_u64(_hashed([7, 8, 9]))
+    b = minhash_signature_u64(_hashed([9, 7, 8]))
+    assert a == b and len(a) == NUM_PERM
+    assert all(-(1 << 63) <= v < (1 << 63) for v in a)  # Spark LongType range
+    assert minhash_signature_u64(_hashed([])) == [0] * NUM_PERM
 
 
 def test_simhash_near_duplicates_close():

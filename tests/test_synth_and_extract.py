@@ -8,7 +8,7 @@ import os
 import duckdb
 import pyarrow.parquet as pq
 
-from mdmpublic_spark.functions.text import extract_text_str, normalize_str, shingles_str
+from mdmpublic_spark.functions.text import extract_text_str
 from mdmpublic_spark.gen.synth import generate_corpus
 
 
@@ -47,14 +47,6 @@ def test_extraction_strips_markup():
         "<style>p{}</style></head><body><p>Hello&nbsp;world</p><!-- c --></body></html>"
     )
     assert extract_text_str(html) == "T & U Hello world"
-
-
-def test_normalize_and_shingles():
-    assert normalize_str("Hello, World!  42") == "hello world 42"
-    sh = shingles_str("a b c d", k=3)
-    assert sh == ["a b c", "b c d"]
-    assert shingles_str("a b", k=3) == ["a b"]
-    assert shingles_str("", k=3) == []
 
 
 def test_labeled_pairs_consistent_with_clusters(corpus_dir):

@@ -1,36 +1,69 @@
-"""Tests for the table layer's retention operators (P7), the Spark-hash
-parity pin that the stop-shingle suppression relies on, and the
-candidate-pair generator's shuffle fallback path."""
+"""Tests for the table layer's retention operators (P7), the LSH
+block-key pin, and the candidate-pair generator's shuffle fallback
+path."""
 
 from __future__ import annotations
 
 import os
 import random
-import string
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mdmpublic_spark.functions.hashing import spark_hash32
+from mdmpublic_spark.functions.hashing import LSH_BANDS, LSH_ROWS, minhash_signature_u64
+from mdmpublic_spark.functions.text import (
+    shingle_hashes_from_token_hashes,
+    token_hashes_expr,
+    tokens_expr,
+)
+from mdmpublic_spark.operators.blocking import block_keys
 from mdmpublic_spark.operators.pairs import PairGenStats, candidate_pairs
 from mdmpublic_spark.tables import Table
 
 
-def test_spark_hash32_matches_jvm_hash(spark):
-    """spark_hash32 must equal F.hash() bit-for-bit — page_features bakes
-    driver-side hashes of the stop set into the plan and compares them
-    against JVM-hashed shingle columns."""
-    random.seed(11)
-    samples = ["", "a", "ab", "abc", "abcd", "três çoisas ünicode ✓"] + [
-        "".join(random.choices(string.printable, k=random.randrange(1, 64)))
-        for _ in range(100)
-    ]
-    rows = (
-        spark.createDataFrame([(s,) for s in samples], "s string")
-        .select("s", F.hash("s").alias("h"))
+def test_block_keys_equal_python_reference(spark):
+    """LSH block keys equal an in-test reference: the MinHash of each
+    page's stop-filtered shingle ids, banded with a Python f-string, and
+    no keys at all for a page left with no shingles (empty text,
+    punctuation only, every shingle a stop shingle). Pins the JVM banding
+    of signed longs and the empty-set mask of ``block_keys``."""
+    boiler = "Home About Contact Privacy Terms"
+    texts = {
+        "u/empty": "",
+        "u/punct": "!!! ... --- ???",
+        "u/stop": boiler,
+        "u/one": "Solitary",
+        "u/two": "two Words",
+        "u/mixed": boiler + " the quick brown fox jumps over the lazy dog",
+        "u/caps": "The QUICK brown Fox jumps, over the lazy dog!",
+        "u/long": " ".join(f"w{i % 37}" for i in range(300)),
+    }
+    pages = spark.createDataFrame(sorted(texts.items()), "url string, text string")
+    shingle_ids = {
+        r["url"]: r["sh"]
+        for r in pages.select("url", tokens_expr(F.col("text")).alias("toks"))
+        .select("url", token_hashes_expr(F.col("toks")).alias("th"))
+        .select("url", shingle_hashes_from_token_hashes(F.col("th")).alias("sh"))
         .collect()
-    )
-    assert all(r["h"] == spark_hash32(r["s"]) for r in rows)
+    }
+    stop = set(shingle_ids["u/stop"])
+    expected = []
+    for url, ids in shingle_ids.items():
+        kept = np.asarray([h for h in ids if h not in stop], dtype=np.int64)
+        if kept.size == 0:
+            continue
+        sig = minhash_signature_u64(kept.view(np.uint64))
+        expected += [
+            (url, f"b{b}:" + "-".join(str(v) for v in sig[b * LSH_ROWS : (b + 1) * LSH_ROWS]))
+            for b in range(LSH_BANDS)
+        ]
+    got = [
+        (r["url"], r["block_key"])
+        for r in block_keys(pages, use_domain=False, stop_hashes=sorted(stop)).collect()
+    ]
+    assert sorted(got) == sorted(expected)
+    assert {u for u, _ in got} == {"u/one", "u/two", "u/mixed", "u/caps", "u/long"}
 
 
 def test_delete_where_and_null_semantics(spark, tmp_path):
@@ -208,8 +241,6 @@ def test_jvm_scoring_bit_equals_python_udf(spark, corpus_dir):
     same integer cardinalities, same IEEE division, same left-to-right
     weighted sum (operators/scoring.py:score_pairs)."""
     from mdmpublic_spark.operators.extract import dedup_latest, extract_pages
-    from mdmpublic_spark.operators.blocking import block_keys
-    from mdmpublic_spark.operators.pairs import candidate_pairs
     from mdmpublic_spark.operators.scoring import make_score_udf, page_features, score_pairs
 
     pages = dedup_latest(extract_pages(spark.read.parquet(f"{corpus_dir}/pages.parquet")))

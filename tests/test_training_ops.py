@@ -175,33 +175,51 @@ def test_token_sketch_catches_word_reordered_dups(spark):
     assert verified[(1, 2)][0] == verified[(1, 2)][1] == 8
 
 
-def test_minhash_token_recall1_equals_bruteforce(spark, docs):
-    """At the recall-1 banding (64×1) the token-sketch operator's output
-    must equal the exact token-Jaccard ≥ 0.5 join, row for row — the
-    same contract the DuckDB oracle pins at sf0.01, checked here against
-    an independent in-test brute force on a sample."""
+def _assert_recall1_equals_bruteforce(docs, arm):
+    """At the recall-1 banding (64×1) the sketch arm's output (sketch =
+    verify = ``arm``) must equal the exact Jaccard ≥ 0.5 join over its
+    set, row for row — the contract the DuckDB oracle pins at sf0.01,
+    checked here against an independent in-test brute force over the
+    whole fixture (no doc below id 60 has a shingle partner at 0.5)."""
     import re
 
-    sample = docs.where(F.col("doc_id") < 60).select("doc_id", "text")
-    toks = {
-        r["doc_id"]: {t for t in re.split(r"[^a-z0-9]+", (r["text"] or "").lower()) if t}
-        for r in sample.collect()
-    }
-    ids = sorted(toks)
+    sample = docs.select("doc_id", "text")
+
+    def shingles(toks):
+        if len(toks) < 3:
+            return {" ".join(toks)} if toks else set()
+        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+    sets = {}
+    for r in sample.collect():
+        toks = [t for t in re.split(r"[^a-z0-9]+", (r["text"] or "").lower()) if t]
+        sets[r["doc_id"]] = set(toks) if arm == "token" else shingles(toks)
+    ids = sorted(sets)
     expected = {}
     for i, a in enumerate(ids):
         for b in ids[i + 1:]:
-            inter = len(toks[a] & toks[b])
-            union = len(toks[a] | toks[b])
+            inter = len(sets[a] & sets[b])
+            union = len(sets[a] | sets[b])
             if union and inter * 100 >= 50 * union:
                 expected[(a, b)] = (inter, union)
     got = {
         (r["id_a"], r["id_b"]): (r["inter_n"], r["union_n"])
         for r in dedup.minhash_lsh_pairs(
-            sample, threshold=0.5, n_bands=64, n_rows=1, sketch="token", verify="token"
+            sample, threshold=0.5, n_bands=64, n_rows=1, sketch=arm, verify=arm
         ).collect()
     }
-    assert got == expected
+    assert expected and got == expected
+
+
+def test_minhash_token_recall1_equals_bruteforce(spark, docs):
+    _assert_recall1_equals_bruteforce(docs, "token")
+
+
+def test_minhash_shingle_recall1_equals_bruteforce(spark, docs):
+    """The shingle arm's reference builds *string* 3-word shingles (the
+    whole token stream when shorter), so it checks the hashed shingle
+    identity the operator uses against plain text."""
+    _assert_recall1_equals_bruteforce(docs, "shingle")
 
 
 def test_exact_dedup_counts(spark, docs):
