@@ -66,16 +66,7 @@ def extract_title_str(html: str, max_chars: int = 200) -> str:
     return _WS_RE.sub(" ", s).strip()[:max_chars]
 
 
-def extract_title_bytes(html: bytes) -> str:
-    return extract_title_str(html.decode("utf-8", errors="replace"))
-
-
 # --- vectorized (Arrow) UDFs ---
-
-
-@F.pandas_udf(StringType())
-def extract_title(html: pd.Series) -> pd.Series:
-    return html.map(extract_title_bytes)
 
 
 _PAGE_SCHEMA = StructType(

@@ -59,26 +59,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mdmpublic_spark.metrics import MetricsSink
-from mdmpublic_spark.operators.blocking import block_keys
+from mdmpublic_spark.operators.blocking import block_keys, stop_ids
 from mdmpublic_spark.operators.clustering import connected_components
 from mdmpublic_spark.operators.extract import dedup_latest, extract_pages
 from mdmpublic_spark.operators.golden import assign_clusters, golden_records
 from mdmpublic_spark.operators.pairs import PairGenStats, delta_candidate_pairs
-from mdmpublic_spark.operators.scoring import page_features, score_pairs
-from mdmpublic_spark.pipeline import PipelineConfig
+from mdmpublic_spark.operators.scoring import match_edges, page_features, score_pairs
+from mdmpublic_spark.pipeline import STAGES, PipelineConfig
 from mdmpublic_spark.plans.runner import StageRunner
 from mdmpublic_spark.tables import Table
-
-MASTER_TABLES = (
-    "extract",
-    "profile",
-    "block",
-    "pairs",
-    "features",
-    "score",
-    "cluster",
-    "golden",
-)
 
 
 def incremental_update(
@@ -97,7 +86,7 @@ def incremental_update(
     batch_id = batch_id or hashlib.sha256(new_pages_path.encode()).hexdigest()[:8]
     wall_t0 = _time.time()
 
-    master = {n: Table(os.path.join(work_dir, n)) for n in MASTER_TABLES}
+    master = {n: Table(os.path.join(work_dir, n)) for n in STAGES}
     if not master["cluster"].exists():
         raise FileNotFoundError(
             f"{work_dir} holds no completed pipeline run (no cluster table); "
@@ -116,7 +105,7 @@ def incremental_update(
             "batch_id": batch_id,
             "src": new_pages_path,
             "base_snapshots": {
-                n: master[n].current_snapshot_id() for n in MASTER_TABLES
+                n: master[n].current_snapshot_id() for n in STAGES
             },
             "merges": {},
         }
@@ -193,30 +182,16 @@ def incremental_update(
 
     _apply_merge("extract", lambda: _fold(master["extract"], eff.drop("is_new")))
 
-    # ---- 3. frozen profile (Zipf head only — bounded collect)
-    prof_rows = (
-        master["profile"]
-        .read(spark, snapshot_id=base["profile"])
-        .select("h", "h32")
-        .collect()
+    # ---- 3. frozen profile
+    stop_hashes, stop_hashes32 = stop_ids(
+        master["profile"].read(spark, snapshot_id=base["profile"])
     )
-    stop_hashes = [r["h"] for r in prof_rows]
-    stop_hashes32 = [r["h32"] for r in prof_rows]
 
     # ---- 4. delta blocking + membership merge
     d_block_t = runner.run_stage(
         stage("block"),
-        lambda: block_keys(
-            eff.drop("is_new"),
-            use_domain=cfg.use_domain_keys,
-            use_lsh=cfg.use_lsh_keys,
-            stop_hashes=stop_hashes,
-        ),
-        config={
-            "domain": cfg.use_domain_keys,
-            "lsh": cfg.use_lsh_keys,
-            "base_profile": base["profile"],
-        },
+        lambda: block_keys(eff.drop("is_new"), stop_hashes=stop_hashes),
+        config={"base_profile": base["profile"]},
         inputs=[eff_t],
     )
     _apply_merge("block", lambda: _fold(master["block"], d_block_t.read(spark)))
@@ -241,14 +216,12 @@ def incremental_update(
             blocked_all,
             eff.select("url"),
             max_block_size=cfg.max_block_size,
-            broadcast_threshold=cfg.broadcast_threshold,
             stats=pair_stats,
             prefix_caps=cfg.prefix_caps,
             prior_changed=prior_changed,
         ),
         config={
             "max_block_size": cfg.max_block_size,
-            "broadcast_threshold": cfg.broadcast_threshold,
             "prefix_caps": cfg.prefix_caps,
             "base_blocked": base["block"],
         },
@@ -263,10 +236,8 @@ def incremental_update(
     # ---- 6. delta features + merge
     d_feat_t = runner.run_stage(
         stage("features"),
-        lambda: page_features(
-            eff.drop("is_new"), title_chars=cfg.title_chars, stop_hashes32=stop_hashes32
-        ),
-        config={"title_chars": cfg.title_chars, "base_profile": base["profile"]},
+        lambda: page_features(eff.drop("is_new"), stop_hashes32=stop_hashes32),
+        config={"base_profile": base["profile"]},
         inputs=[eff_t],
     )
     _apply_merge("features", lambda: _fold(master["features"], d_feat_t.read(spark)))
@@ -274,11 +245,7 @@ def incremental_update(
     # ---- 7. score just the delta pairs against the merged features
     d_scored_t = runner.run_stage(
         stage("score"),
-        lambda: score_pairs(
-            d_pairs_t.read(spark),
-            master["features"].read(spark),
-            threshold=cfg.score_threshold,
-        )[0],
+        lambda: score_pairs(d_pairs_t.read(spark), master["features"].read(spark)),
         config={"base_features": base["features"]},
         inputs=[d_pairs_t, d_feat_t],
     )
@@ -317,11 +284,7 @@ def incremental_update(
     # ---- 8. cluster by contraction
     def _cluster() -> DataFrame:
         old_assign = master["cluster"].read(spark, snapshot_id=base["cluster"])
-        new_edges = (
-            d_scored_t.read(spark)
-            .where(F.col("score") >= cfg.score_threshold)
-            .select(F.col("url_a").alias("src"), F.col("url_b").alias("dst"))
-        )
+        new_edges = match_edges(d_scored_t.read(spark), cfg.score_threshold)
         if n_changed == 0:
             # insert-only batch: no old edge died, so NO cluster needs
             # dissolving — every prior assignment enters as a star edge
@@ -340,14 +303,11 @@ def incremental_update(
                 F.col("url").alias("src"), F.col("cluster_id").alias("dst")
             )
             dissolved_members = old_assign.join(dissolved, "cluster_id").select("url")
-            replay = (
-                _kept_old_scored()
-                .where(F.col("score") >= cfg.score_threshold)
-                .join(dissolved_members.withColumnRenamed("url", "url_a"), "url_a")
-                .select(F.col("url_a").alias("src"), F.col("url_b").alias("dst"))
+            replay = match_edges(_kept_old_scored(), cfg.score_threshold).join(
+                dissolved_members.withColumnRenamed("url", "src"), "src"
             )
             cc_in = stars.unionByName(replay).unionByName(new_edges)
-        assign, rounds = connected_components(cc_in, max_iter=cfg.cc_max_iter)
+        assign, rounds = connected_components(cc_in)
         metrics.add(stage("cluster"), "cc_rounds", rounds)
         return assign
 
@@ -389,7 +349,7 @@ def incremental_update(
         "changed_urls": n_eff - n_new,
         "delta_pairs": runner.state[stage("pairs")]["rows"],
         "pair_stats": vars(pair_stats),
-        "snapshots": {n: master[n].current_snapshot_id() for n in MASTER_TABLES},
+        "snapshots": {n: master[n].current_snapshot_id() for n in STAGES},
     }
 
 

@@ -108,11 +108,19 @@ def common_shingles(
     )
 
 
+def stop_ids(profile_df: DataFrame) -> tuple[list[int], list[int]]:
+    """A stop-shingle profile (``common_shingles``) → (64-bit ids, 32-bit
+    ids): the ``h`` ids feed ``block_keys``' JVM-side filter, the ``h32``
+    ids scoring's suppression (``page_features``). The profile holds the
+    Zipf head only — small by construction, so one bounded collect."""
+    rows = profile_df.select("h", "h32").collect()
+    return [r["h"] for r in rows], [r["h32"] for r in rows]
+
+
 def block_keys(
     pages: DataFrame,
     use_domain: bool = True,
     use_lsh: bool = True,
-    min_text_chars: int = 1,
     stop_hashes: list[int] | None = None,
 ) -> DataFrame:
     """(url, text) → (url, block_key), one row per (page, key).
@@ -142,7 +150,7 @@ def block_keys(
             # hash-to-hash against the profile's identical combined hash
             sh_h = F.array_except(sh_h, F.lit(sorted(stop_hashes)).cast("array<bigint>"))
         lsh = (
-            pages.where(F.length("text") >= min_text_chars)
+            pages.where(F.length("text") >= 1)
             .select("url", tokens_expr(F.col("text")).alias("toks"))
             .select("url", token_hashes_expr(F.col("toks")).alias("th"))
             .select("url", sh_h.alias("sh_h"))

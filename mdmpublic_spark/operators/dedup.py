@@ -75,6 +75,46 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
+def _rational(threshold: float) -> Fraction:
+    """A decimal threshold as the exact rational p/q (0.6 → 3/5, 0.57 →
+    57/100), so inter/union ≥ t is tested as inter·q ≥ p·union on
+    integers — no float boundary at any decimal threshold."""
+    return Fraction(str(threshold)).limit_denominator(10_000)
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    toks_a: DataFrame,
+    toks_b: DataFrame,
+    sizes_a: DataFrame,
+    sizes_b: DataFrame,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact Jaccard verify of candidate (id_a, id_b) pairs: the
+    intersection over the (id, tok) postings of each side, the (id,
+    n_tok) set sizes of each side, and the integer-exact threshold test
+    → (id_a, id_b, inter_n, union_n)."""
+    p, q = _rational(threshold).as_integer_ratio()
+    ja = toks_a.select(F.col(id_col).alias("id_a"), "tok")
+    jb = toks_b.select(F.col(id_col).alias("id_b"), "tok")
+    sa = sizes_a.select(F.col(id_col).alias("id_a"), F.col("n_tok").alias("na"))
+    sb = sizes_b.select(F.col(id_col).alias("id_b"), F.col("n_tok").alias("nb"))
+    inter = (
+        cand.join(ja, "id_a")
+        .join(jb, ["id_b", "tok"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter_n"))
+    )
+    return (
+        inter.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("inter_n"))
+        .where(F.col("inter_n") * q >= F.lit(p) * F.col("union_n"))
+        .select("id_a", "id_b", "inter_n", "union_n")
+    )
+
+
 def _postings_jaccard(
     toks: DataFrame, threshold: float, id_col: str, df_cap: int
 ) -> DataFrame:
@@ -123,7 +163,6 @@ def _postings_jaccard(
     prefixes: at the ER threshold (0.95) prefixes are ~5% of postings
     and the quadratic term applies only within near-unique tokens.
     """
-    _t = Fraction(str(threshold)).limit_denominator(10_000)
     # Hash each token/gram to int64 BEFORE anything shuffles: the posting
     # rows (id, tok) are the dominant byte volume of this family, and a
     # raw 5-40 byte string per posting is pure waste when only equality
@@ -139,7 +178,7 @@ def _postings_jaccard(
     # posting table pins executor memory for the caller's whole session
     # (the leak outweighs the recompute). At warehouse scale, materialize
     # the postings once to a table and point all three branches at it.
-    p, q = _t.numerator, _t.denominator
+    p, q = _rational(threshold).as_integer_ratio()
     sizes = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_tok"))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     joinable = toks.join(
@@ -200,28 +239,7 @@ def _postings_jaccard(
     # intersection (same token set the naive join counted), then the
     # integer-exact threshold test — output is identical to the
     # unfiltered inverted-list join.
-    ja = joinable.select(F.col(id_col).alias("id_a"), "tok")
-    jb = joinable.select(F.col(id_col).alias("id_b"), "tok")
-    inter = (
-        cand.join(ja, "id_a")
-        .join(jb, ["id_b", "tok"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter_n"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_tok").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_tok").alias("nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("inter_n"))
-        # integer-exact threshold test: t as the exact rational p/q, so
-        # inter/union >= t  ⇔  inter*q >= p*union — no float boundary at
-        # any decimal threshold (0.6 → 3/5, 0.95 → 19/20, ...)
-        .where(
-            F.col("inter_n") * _t.denominator >= F.lit(_t.numerator) * F.col("union_n")
-        )
-        .select("id_a", "id_b", "inter_n", "union_n")
-    )
+    return _verify_jaccard(cand, joinable, joinable, sizes, sizes, id_col, threshold)
 
 
 def token_jaccard_pairs(
@@ -314,8 +332,7 @@ def cross_jaccard_pairs(
     equal to the naive A×B inverted-list join (DuckDB oracle:
     queries/er_documents.LINK_SOURCES_ORACLE).
     """
-    _t = Fraction(str(threshold)).limit_denominator(10_000)
-    p, q = _t.numerator, _t.denominator
+    p, q = _rational(threshold).as_integer_ratio()
     toks = (
         tokenized(a_docs, id_col).withColumn("side", F.lit(0))
         .unionByName(tokenized(b_docs, id_col).withColumn("side", F.lit(1)))
@@ -373,26 +390,15 @@ def cross_jaccard_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    ja = joinable.where(F.col("side") == 0).select(F.col(id_col).alias("id_a"), "tok")
-    jb = joinable.where(F.col("side") == 1).select(F.col(id_col).alias("id_b"), "tok")
-    inter = (
-        cand.join(ja, "id_a")
-        .join(jb, ["id_b", "tok"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter_n"))
-    )
-    sa = sizes.where(F.col("side") == 0).select(
-        F.col(id_col).alias("id_a"), F.col("n_tok").alias("na")
-    )
-    sb = sizes.where(F.col("side") == 1).select(
-        F.col(id_col).alias("id_b"), F.col("n_tok").alias("nb")
-    )
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("inter_n"))
-        .where(F.col("inter_n") * q >= F.lit(p) * F.col("union_n"))
-        .select("id_a", "id_b", "inter_n", "union_n")
+    a_side, b_side = F.col("side") == 0, F.col("side") == 1
+    return _verify_jaccard(
+        cand,
+        joinable.where(a_side),
+        joinable.where(b_side),
+        sizes.where(a_side),
+        sizes.where(b_side),
+        id_col,
+        threshold,
     )
 
 
@@ -550,25 +556,7 @@ def minhash_lsh_pairs(
     else:
         toks = tokenized(docs, id_col).select(id_col, F.xxhash64("tok").alias("tok"))
     sizes = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_tok"))
-    ta = toks.select(F.col(id_col).alias("id_a"), "tok")
-    tb = toks.select(F.col(id_col).alias("id_b"), "tok")
-    inter = (
-        cand.join(ta, "id_a")
-        .join(tb, ["id_b", "tok"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter_n"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_tok").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_tok").alias("nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("inter_n"))
-        .where(
-            F.col("inter_n") * 100 >= F.lit(int(threshold * 100)) * F.col("union_n")
-        )
-        .select("id_a", "id_b", "inter_n", "union_n")
-    )
+    return _verify_jaccard(cand, toks, toks, sizes, sizes, id_col, threshold)
 
 
 def simhash_pairs(

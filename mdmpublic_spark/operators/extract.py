@@ -19,23 +19,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from mdmpublic_spark.functions.text import extract_page, extract_title
+from mdmpublic_spark.functions.text import extract_page
 
 
-def extract_pages(raw: DataFrame, trust_existing_text: bool = False) -> DataFrame:
+def extract_pages(raw: DataFrame) -> DataFrame:
     """(url, warc_ts, html[, text], lang) → (url, warc_ts, text, title, lang).
 
-    ``trust_existing_text=False`` re-extracts from html always — the
-    deterministic path; tests assert it reproduces the stored text
-    byte-for-byte. ``title`` is the real <title> contents (empty string
-    when the page has none) — scoring falls back to a text prefix then.
-    text+title come from ONE pandas UDF so each html blob crosses Arrow
-    once (html dominates the stage's Arrow volume).
+    Re-extracts from html always — the deterministic path; tests assert
+    it reproduces the stored text byte-for-byte. ``title`` is the real
+    <title> contents (empty string when the page has none) — scoring
+    falls back to a text prefix then. text+title come from ONE pandas
+    UDF so each html blob crosses Arrow once (html dominates the stage's
+    Arrow volume).
     """
-    if trust_existing_text and "text" in raw.columns:
-        return raw.select(
-            "url", "warc_ts", "text", extract_title(F.col("html")).alias("title"), "lang"
-        )
     return raw.select(
         "url", "warc_ts", extract_page(F.col("html")).alias("p"), "lang"
     ).select("url", "warc_ts", F.col("p.text").alias("text"), F.col("p.title").alias("title"), "lang")

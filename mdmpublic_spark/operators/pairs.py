@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 @dataclass
@@ -146,6 +146,46 @@ def _classify_sizes(
     return classified, n_joinable, n_hot
 
 
+def _membership(
+    blocked: DataFrame, classified: DataFrame, n_joinable: int, broadcast_limit: int
+) -> DataFrame:
+    """(url, block_key) rows of joinable blocks, tagged with their class
+    (block_key, url, cls). The classification is broadcast while the
+    joinable-key count fits in memory; beyond the limit (10^12-doc
+    regime) the join falls back to a shuffle — Catalyst picks the
+    strategy for the un-hinted join."""
+    if n_joinable <= broadcast_limit:
+        return blocked.join(F.broadcast(classified), "block_key")
+    return blocked.join(classified, "block_key")
+
+
+def _block_pairs(
+    left: DataFrame, right: DataFrame, n_hot: int, keep: Column, url_a: Column, url_b: Column
+) -> DataFrame:
+    """Pairs of ``left`` × ``right`` members sharing a block, one join per
+    class: small blocks shuffle, hot blocks broadcast the right side (hot
+    members are bounded, ≤ n_hot × cap). ``keep`` is the caller's pair
+    predicate and ``url_a``/``url_b`` its orientation, over the ``a.url``
+    / ``b.url`` columns. The union is deduplicated across key families —
+    one shuffle on the (near-uniform) pair key."""
+
+    def join(cls: str, broadcast_right: bool) -> DataFrame:
+        a = left.where(F.col("cls") == cls).select("block_key", "url").alias("a")
+        b = right.where(F.col("cls") == cls).select("block_key", "url").alias("b")
+        if broadcast_right:
+            b = F.broadcast(b)
+        return (
+            a.join(b, F.col("a.block_key") == F.col("b.block_key"))
+            .where(keep)
+            .select(url_a.alias("url_a"), url_b.alias("url_b"))
+        )
+
+    pairs = join("small", broadcast_right=False)
+    if n_hot:
+        pairs = pairs.unionByName(join("hot", broadcast_right=True))
+    return pairs.groupBy("url_a", "url_b").agg(F.count(F.lit(1)).alias("n_keys"))
+
+
 def candidate_pairs(
     blocked: DataFrame,
     max_block_size: int = 2000,
@@ -172,38 +212,9 @@ def candidate_pairs(
     classified, n_joinable, n_hot = _classify_blocks(
         blocked, max_block_size, broadcast_threshold, prefix_caps, stats
     )
-
-    # joinable membership rows: size>1 and not oversize. Broadcast the
-    # classification only while the joinable-key count fits in memory;
-    # beyond the limit (10^12-doc regime) fall back to a shuffle join —
-    # Catalyst picks the strategy for the un-hinted join.
-    if n_joinable <= membership_broadcast_limit:
-        member = blocked.join(F.broadcast(classified), "block_key")
-    else:
-        member = blocked.join(classified, "block_key")
-
-    small = member.where(F.col("cls") == "small").select("block_key", "url")
-    hot = member.where(F.col("cls") == "hot").select("block_key", "url")
-
-    def self_join(df: DataFrame, broadcast_right: bool) -> DataFrame:
-        a = df.alias("a")
-        b = df.alias("b")
-        right = F.broadcast(b) if broadcast_right else b
-        return (
-            a.join(right, F.col("a.block_key") == F.col("b.block_key"))
-            .where(F.col("a.url") < F.col("b.url"))
-            .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
-        )
-
-    parts = []
-    if small is not None:
-        parts.append(self_join(small, broadcast_right=False))
-    if n_hot:
-        parts.append(self_join(hot, broadcast_right=True))
-    pairs = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-
-    # dedup across key families — one shuffle on the (near-uniform) pair key
-    return pairs.groupBy("url_a", "url_b").agg(F.count(F.lit(1)).alias("n_keys"))
+    member = _membership(blocked, classified, n_joinable, membership_broadcast_limit)
+    a, b = F.col("a.url"), F.col("b.url")
+    return _block_pairs(member, member, n_hot, a < b, a, b)
 
 
 def delta_candidate_pairs(
@@ -299,32 +310,9 @@ def delta_candidate_pairs(
     # prune the big side to delta-touched blocks BEFORE anything
     # shuffles: broadcast semi-join, evaluated map-side at the scan
     pruned = blocked_all.join(touched.hint("broadcast"), "block_key", "left_semi")
-    if n_joinable <= membership_broadcast_limit:
-        member = pruned.join(F.broadcast(classified), "block_key")
-    else:
-        member = pruned.join(classified, "block_key")
+    member = _membership(pruned, classified, n_joinable, membership_broadcast_limit)
     dm = member.join(d.hint("broadcast"), "url")
-
-    def join_delta(cls_name: str, broadcast_right: bool) -> DataFrame:
-        a = dm.where(F.col("cls") == cls_name).select("block_key", "url").alias("a")
-        b = member.where(F.col("cls") == cls_name).select("block_key", "url")
-        right = F.broadcast(b.alias("b")) if broadcast_right else b.alias("b")
-        return (
-            a.join(right, F.col("a.block_key") == F.col("b.block_key"))
-            .where(F.col("a.url") != F.col("b.url"))
-            .select(
-                F.least("a.url", "b.url").alias("url_a"),
-                F.greatest("a.url", "b.url").alias("url_b"),
-            )
-        )
-
-    parts = [join_delta("small", broadcast_right=False)]
-    if n_hot:
-        # hot-block members are bounded (≤ n_hot × cap) — same broadcast
-        # policy as candidate_pairs' hot path
-        parts.append(join_delta("hot", broadcast_right=True))
-    pairs = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-
-    # dedup across key families AND across the a/b symmetry for
-    # delta-delta pairs — one shuffle on the (near-uniform) pair key
-    return pairs.groupBy("url_a", "url_b").agg(F.count(F.lit(1)).alias("n_keys"))
+    # a delta-delta pair is found from both sides: least/greatest orients
+    # it, and the dedup tail folds the two copies
+    a, b = F.col("a.url"), F.col("b.url")
+    return _block_pairs(dm, member, n_hot, a != b, F.least(a, b), F.greatest(a, b))

@@ -167,9 +167,7 @@ _MAX_TOKENS = 1024
 _TOKEN_SPLIT = "[^a-z0-9]+"
 
 
-def page_features(
-    pages: DataFrame, title_chars: int = 80, stop_hashes32: list[int] | None = None
-) -> DataFrame:
+def page_features(pages: DataFrame, stop_hashes32: list[int] | None = None) -> DataFrame:
     """(url, text[, title]) → (url, title, tok_h, sh_h) — the narrow
     scoring projection, entirely JVM-side (no Python crossing):
 
@@ -190,10 +188,10 @@ def page_features(
     back to a text prefix."""
     if "title" in pages.columns:
         title = F.coalesce(
-            F.nullif(F.col("title"), F.lit("")), title_expr(F.col("text"), title_chars)
+            F.nullif(F.col("title"), F.lit("")), title_expr(F.col("text"))
         )
     else:
-        title = title_expr(F.col("text"), title_chars)
+        title = title_expr(F.col("text"))
 
     # Materialize the token array, then the token-HASH array, each as its
     # own attribute BEFORE element-wise reference (see functions.text
@@ -327,11 +325,11 @@ def make_jw_udf():
 def score_pairs(
     pairs: DataFrame,
     features: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
     embeddings: DataFrame | None = None,
     w_cos: float = 0.25,
-):
-    """pairs(url_a,url_b) ⨝ features×2 → scored pairs; returns (scored, edges).
+) -> DataFrame:
+    """pairs(url_a,url_b) ⨝ features×2 → scored pairs (url_a, url_b, the
+    five metrics[, cos_emb], score); ``match_edges`` thresholds them.
 
     ``embeddings`` (optional): a (url, embedding array<double>) table.
     When given, a ``cos_emb`` column (JVM-side cosine, no Python
@@ -433,7 +431,7 @@ def score_pairs(
     )
     if cos_term is not None:
         blend = blend + cos_term
-    scored = (
+    return (
         joined.withColumn("_ta", ta).withColumn("_tb", tb)
         # the one Python crossing: the feature arrays and lowered titles
         # go in, the set metrics and gated Jaro-Winkler come out — the
@@ -455,7 +453,11 @@ def score_pairs(
             .alias("score"),
         )
     )
-    edges = scored.where(F.col("score") >= threshold).select(
-        F.col("url_a").alias("src"), F.col("url_b").alias("dst"), "score"
+
+
+def match_edges(scored: DataFrame, threshold: float) -> DataFrame:
+    """Scored pairs at ``score ≥ threshold`` → (src, dst) match edges, the
+    input of ``clustering.connected_components``."""
+    return scored.where(F.col("score") >= threshold).select(
+        F.col("url_a").alias("src"), F.col("url_b").alias("dst")
     )
-    return scored, edges

@@ -1,7 +1,7 @@
 """The end-to-end MDM record-linkage pipeline (SURVEY.md §7.1).
 
     pages ─extract→ extracted ─block→ blocked ─pairs→ pairs
-          ─score→ scored/edges ─cluster→ clusters ─golden→ golden
+          ─score→ scored ─cluster→ clusters ─golden→ golden
 
 Each stage is a checkpointed table commit (plans/runner.py) with
 per-partition lineage counters (metrics.py); reruns skip completed
@@ -22,10 +22,10 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from mdmpublic_spark.metrics import MetricsSink
-from mdmpublic_spark.operators.blocking import block_keys, common_shingles
+from mdmpublic_spark.operators.blocking import block_keys, common_shingles, stop_ids
 from mdmpublic_spark.operators.clustering import connected_components
 from mdmpublic_spark.operators.extract import dedup_latest, extract_pages
 from mdmpublic_spark.operators.golden import assign_clusters, golden_records
@@ -34,27 +34,31 @@ from mdmpublic_spark.operators.pairs import (
     PairGenStats,
     candidate_pairs,
 )
-from mdmpublic_spark.operators.scoring import DEFAULT_THRESHOLD, page_features, score_pairs
+from mdmpublic_spark.operators.scoring import (
+    DEFAULT_THRESHOLD,
+    match_edges,
+    page_features,
+    score_pairs,
+)
 from mdmpublic_spark.plans.runner import StageRunner
+
+# the linkage stages, in run order; each commits the table of its name
+# under the work dir, and the delta fold (incremental.py) merges into
+# the same tables
+STAGES = ("extract", "profile", "block", "pairs", "features", "score", "cluster", "golden")
 
 
 @dataclass
 class PipelineConfig:
-    use_domain_keys: bool = True
-    use_lsh_keys: bool = True
-    min_stop_df: int = 20
-    stop_frac: float = 0.005
+    # pair admission cap on block size (see operators/pairs.py)
     max_block_size: int = 2000
-    broadcast_threshold: int = 200
     # per-key-family admission caps (see operators/pairs.py); None
     # disables family-specific tightening
     prefix_caps: dict | None = field(
         default_factory=lambda: dict(DEFAULT_PREFIX_CAPS)
     )
+    # match threshold on the blended pair score (operators/scoring.py)
     score_threshold: float = DEFAULT_THRESHOLD
-    title_chars: int = 80
-    cc_max_iter: int = 25
-    repartition: int | None = None  # pair/score parallelism override
     # path to a committed profile table to reuse instead of re-profiling
     # (profile pinning): incremental batches freeze the master profile so
     # blocking keys stay comparable across batches, and a full recompute
@@ -83,10 +87,10 @@ def run_pipeline(
     # Input parallelism: a small corpus may live in a single parquet file,
     # which Spark scans as ONE task (maxPartitionBytes splitting only helps
     # large files) — the whole extract/LSH map path would run on one core.
-    # Explicitly spread the scan across the configured parallelism; on a
+    # Explicitly spread the scan across the shuffle parallelism; on a
     # real cluster with many input files this repartition coalesces to a
     # no-op-sized shuffle relative to the UDF work it unlocks.
-    par = cfg.repartition or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
     raw = spark.read.parquet(pages_path).repartition(par)
 
     def _spread(df: DataFrame) -> DataFrame:
@@ -116,65 +120,35 @@ def run_pipeline(
             from mdmpublic_spark.tables import Table
 
             return Table(cfg.frozen_profile).read(spark)
-        return common_shingles(
-            extracted,
-            cfg.min_stop_df,
-            cfg.stop_frac,
-            n_docs=runner.state["extract"]["rows"],
-        )
+        return common_shingles(extracted, n_docs=runner.state["extract"]["rows"])
 
     profile_t = runner.run_stage(
         "profile",
         _profile,
-        config={
-            "min_stop_df": cfg.min_stop_df,
-            "stop_frac": cfg.stop_frac,
-            "frozen": cfg.frozen_profile,
-        },
+        config={"frozen": cfg.frozen_profile},
         inputs=[extracted_t],
     )
-    # Zipf head only — small by construction; the 64-bit ids feed
-    # blocking's JVM-side filter, the 32-bit ids feed scoring suppression
-    prof_rows = profile_t.read(spark).select("h", "h32").collect()
-    stop_hashes = [r["h"] for r in prof_rows]
-    stop_hashes32 = [r["h32"] for r in prof_rows]
-    metrics.add("profile", "stop_shingles", len(prof_rows))
+    stop_hashes, stop_hashes32 = stop_ids(profile_t.read(spark))
+    metrics.add("profile", "stop_shingles", len(stop_hashes))
 
     # 2b. block — multi-pass keys (domain + LSH bands over stopped shingles)
     blocked_t = runner.run_stage(
         "block",
-        lambda: block_keys(
-            extracted,
-            use_domain=cfg.use_domain_keys,
-            use_lsh=cfg.use_lsh_keys,
-            stop_hashes=stop_hashes,
-        ),
-        config={"domain": cfg.use_domain_keys, "lsh": cfg.use_lsh_keys},
+        lambda: block_keys(extracted, stop_hashes=stop_hashes),
         inputs=[extracted_t, profile_t],
     )
 
     # 3. pairs — skew-aware block self-join
     pair_stats = PairGenStats()
-
-    def _pairs() -> DataFrame:
-        df = candidate_pairs(
-            blocked_t.read(spark),
-            max_block_size=cfg.max_block_size,
-            broadcast_threshold=cfg.broadcast_threshold,
-            stats=pair_stats,
-            prefix_caps=cfg.prefix_caps,
-        )
-        return df.repartition(cfg.repartition) if cfg.repartition else df
-
     pairs_t = runner.run_stage(
         "pairs",
-        _pairs,
-        config={
-            "max_block_size": cfg.max_block_size,
-            "broadcast_threshold": cfg.broadcast_threshold,
-            "repartition": cfg.repartition,
-            "prefix_caps": cfg.prefix_caps,
-        },
+        lambda: candidate_pairs(
+            blocked_t.read(spark),
+            max_block_size=cfg.max_block_size,
+            stats=pair_stats,
+            prefix_caps=cfg.prefix_caps,
+        ),
+        config={"max_block_size": cfg.max_block_size, "prefix_caps": cfg.prefix_caps},
         inputs=[blocked_t],
     )
     metrics.add("pairs", "oversize_blocks", pair_stats.oversize_blocks)
@@ -186,37 +160,21 @@ def run_pipeline(
     # shingle arrays per side doubled the stage's JVM work.
     features_t = runner.run_stage(
         "features",
-        lambda: page_features(
-            extracted, title_chars=cfg.title_chars, stop_hashes32=stop_hashes32
-        ),
-        config={"title_chars": cfg.title_chars},
+        lambda: page_features(extracted, stop_hashes32=stop_hashes32),
         inputs=[extracted_t, profile_t],
     )
 
-    # 4b. score — vectorized pairwise metrics; edges = score ≥ θ
-    def _scored() -> DataFrame:
-        scored, _ = score_pairs(
-            pairs_t.read(spark), features_t.read(spark), threshold=cfg.score_threshold
-        )
-        return scored
-
+    # 4b. score — vectorized pairwise metrics
     scored_t = runner.run_stage(
         "score",
-        _scored,
-        config={},
+        lambda: score_pairs(pairs_t.read(spark), features_t.read(spark)),
         inputs=[pairs_t, features_t],
     )
 
-    # 5. cluster — large-star/small-star CC over match edges
+    # 5. cluster — large-star/small-star CC over match edges (score ≥ θ)
     def _clusters() -> DataFrame:
-        edges = (
-            scored_t.read(spark)
-            .where(F.col("score") >= cfg.score_threshold)
-            .select(F.col("url_a").alias("src"), F.col("url_b").alias("dst"))
-        )
         assign, rounds = connected_components(
-            edges,
-            max_iter=cfg.cc_max_iter,
+            match_edges(scored_t.read(spark), cfg.score_threshold),
             # scored rows upper-bound the edge count — lets CC pick the
             # union-find fast path without a sizing job when small
             edge_count=runner.state["score"]["rows"],
@@ -227,7 +185,7 @@ def run_pipeline(
     clusters_t = runner.run_stage(
         "cluster",
         _clusters,
-        config={"threshold": cfg.score_threshold, "max_iter": cfg.cc_max_iter},
+        config={"threshold": cfg.score_threshold},
         inputs=[scored_t],
     )
 
@@ -236,7 +194,7 @@ def run_pipeline(
         clustered = assign_clusters(extracted, clusters_t.read(spark))
         return golden_records(clustered)
 
-    golden_t = runner.run_stage("golden", _golden, config={}, inputs=[clusters_t, extracted_t])
+    runner.run_stage("golden", _golden, inputs=[clusters_t, extracted_t])
 
     wall = _time.time() - wall_t0
     metrics.flush(spark)
@@ -249,16 +207,7 @@ def run_pipeline(
         "stage_seconds": runner.timings,
         "rows": {s: runner.state[s]["rows"] for s in runner.state},
         "pair_stats": vars(pair_stats),
-        "tables": {
-            "extracted": extracted_t.path,
-            "profile": profile_t.path,
-            "blocked": blocked_t.path,
-            "pairs": pairs_t.path,
-            "features": features_t.path,
-            "scored": scored_t.path,
-            "clusters": clusters_t.path,
-            "golden": golden_t.path,
-        },
+        "tables": {s: runner.table(s).path for s in STAGES},
     }
 
 
@@ -275,28 +224,23 @@ def main() -> None:
     ap.add_argument("--max-block-size", type=int, default=2000)
     ap.add_argument("--master", default=None)
     ap.add_argument(
-        "--warmup",
-        action="store_true",
-        help="run the whole pipeline once into a throwaway dir first, so the "
-        "reported timings reflect a warm JVM (long-lived cluster app), not "
-        "first-run JIT compilation",
-    )
-    ap.add_argument(
         "--warmup-pages",
         default=None,
-        help="corpus for the warmup pass (default: the --pages corpus). A "
-        "small corpus warms JIT, codegen caches and Python workers at a "
-        "fraction of a full-input warmup's cost",
+        help="run the whole pipeline once over this corpus into a throwaway "
+        "dir first, so the reported timings reflect a warm JVM (long-lived "
+        "cluster app), not first-run JIT compilation. A small corpus warms "
+        "JIT, codegen caches and Python workers at a fraction of a "
+        "full-input warmup's cost",
     )
     args = ap.parse_args()
     spark = get_spark(app_name="mdm-pipeline", master=args.master)
     cfg = PipelineConfig(score_threshold=args.threshold, max_block_size=args.max_block_size)
-    if args.warmup or args.warmup_pages:
+    if args.warmup_pages:
         import shutil
         import tempfile
 
         wdir = tempfile.mkdtemp(prefix="mdm-warmup-")
-        run_pipeline(spark, args.warmup_pages or args.pages, wdir, cfg)
+        run_pipeline(spark, args.warmup_pages, wdir, cfg)
         shutil.rmtree(wdir, ignore_errors=True)
     print(json.dumps(run_pipeline(spark, args.pages, args.work_dir, cfg)))
 

@@ -11,10 +11,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mdmpublic_spark.operators.blocking import block_keys, common_shingles
+from mdmpublic_spark.operators.blocking import block_keys, common_shingles, stop_ids
 from mdmpublic_spark.operators.clustering import connected_components
+from mdmpublic_spark.operators.golden import assign_clusters, golden_records
 from mdmpublic_spark.operators.pairs import candidate_pairs
-from mdmpublic_spark.operators.scoring import DEFAULT_THRESHOLD, page_features, score_pairs
+from mdmpublic_spark.operators.scoring import (
+    DEFAULT_THRESHOLD,
+    match_edges,
+    page_features,
+    score_pairs,
+)
+
+
+def _padded(id_col: str):
+    """Zero-padded string id, so lexicographic min == numeric min."""
+    return F.lpad(F.col(id_col).cast("string"), 10, "0")
 
 
 def documents_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -32,7 +43,7 @@ def documents_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("doc://"),
             F.col("source"),
             F.lit("/"),
-            F.lpad(F.col("doc_id").cast("string"), 10, "0"),
+            _padded("doc_id"),
         ).alias("url"),
         "text",
         "lang",
@@ -56,7 +67,7 @@ def embeddings_as_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("doc://"),
             F.col("source"),
             F.lit("/"),
-            F.lpad(F.col("doc_id").cast("string"), 10, "0"),
+            _padded("doc_id"),
         ).alias("url"),
         "embedding",
     )
@@ -80,11 +91,9 @@ def dedup_clusters(
     numeric contract is pinned by tests/test_tables_and_pairs.py::
     test_score_pairs_optional_embedding_cosine."""
     pages = documents_as_pages(spark, sf_dir)
-    prof = common_shingles(pages, min_stop_df=20, stop_frac=0.01).select(
-        "h", "h32"
-    ).collect()
-    stop_hashes = [r["h"] for r in prof]
-    stop_hashes32 = [r["h32"] for r in prof]
+    stop_hashes, stop_hashes32 = stop_ids(
+        common_shingles(pages, min_stop_df=20, stop_frac=0.01)
+    )
     dom = pages.select(
         "url", F.concat(F.lit("d:"), F.col("source")).alias("block_key")
     )
@@ -93,13 +102,18 @@ def dedup_clusters(
     pairs = candidate_pairs(blocked)
     feats = page_features(pages, stop_hashes32=stop_hashes32)
     emb = embeddings_as_urls(spark, sf_dir) if use_embeddings else None
-    _, edges = score_pairs(pairs, feats, threshold=threshold, embeddings=emb, w_cos=w_cos)
-    assign, _ = connected_components(edges.select("src", "dst"))
-    return (
-        pages.join(assign, "url", "left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", F.col("url")))
-        .select("url", "cluster_id")
-    )
+    scored = score_pairs(pairs, feats, embeddings=emb, w_cos=w_cos)
+    assign, _ = connected_components(match_edges(scored, threshold))
+    return assign_clusters(pages, assign).select("url", "cluster_id")
+
+
+def _exact_edges(docs: DataFrame) -> DataFrame:
+    """Exact token-Jaccard ≥ 0.95 pairs (dedup.token_jaccard_pairs) as
+    (src, dst) edges over zero-padded doc ids."""
+    from mdmpublic_spark.operators.dedup import token_jaccard_pairs
+
+    pairs = token_jaccard_pairs(docs, threshold=0.95)
+    return pairs.select(_padded("id_a").alias("src"), _padded("id_b").alias("dst"))
 
 
 def cc_jaccard_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,16 +133,8 @@ def cc_jaccard_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle scale, while the Spark side stays O(log n) rounds at any
     scale.
     """
-    from mdmpublic_spark.operators.dedup import token_jaccard_pairs
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = token_jaccard_pairs(docs, threshold=0.95)
-    # zero-pad ids so the operator's lexicographic min == numeric min
-    edges = pairs.select(
-        F.lpad(F.col("id_a").cast("string"), 10, "0").alias("src"),
-        F.lpad(F.col("id_b").cast("string"), 10, "0").alias("dst"),
-    )
-    assign, _ = connected_components(edges, small_graph_threshold=0)
+    assign, _ = connected_components(_exact_edges(docs), small_graph_threshold=0)
     return assign.select(
         F.col("url").cast("bigint").alias("doc_id"),
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
@@ -185,23 +191,14 @@ def cluster_summary_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ADAPTIVE connected-components path (driver union-find under the
     byte budget at oracle scale, distributed star loop above it) —
     er_cc_jaccard_clusters pins the distributed loop explicitly."""
-    from mdmpublic_spark.operators.dedup import token_jaccard_pairs
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = token_jaccard_pairs(docs, threshold=0.95)
-    edges = pairs.select(
-        F.lpad(F.col("id_a").cast("string"), 10, "0").alias("src"),
-        F.lpad(F.col("id_b").cast("string"), 10, "0").alias("dst"),
-    )
-    assign, _ = connected_components(edges)
+    assign, _ = connected_components(_exact_edges(docs))
     members = docs.select(
-        F.lpad(F.col("doc_id").cast("string"), 10, "0").alias("url")
-    )
-    full = members.join(assign, "url", "left").withColumn(
-        "cluster_id", F.coalesce("cluster_id", F.col("url"))
+        _padded("doc_id").alias("url")
     )
     return (
-        full.groupBy("cluster_id")
+        assign_clusters(members, assign)
+        .groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.max("url").alias("max_doc"))
         .orderBy(F.desc("n_docs"), F.asc("cluster_id"))
         .limit(20)
@@ -274,18 +271,10 @@ def golden_records_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     left join (docs ⨝ assignment on id) and one window over cluster_id;
     pair-capping bounds duplicate-cluster sizes so the window partition
     never skews."""
-    from mdmpublic_spark.operators.dedup import token_jaccard_pairs
-    from mdmpublic_spark.operators.golden import assign_clusters, golden_records
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = token_jaccard_pairs(docs, threshold=0.95)
-    edges = pairs.select(
-        F.lpad(F.col("id_a").cast("string"), 10, "0").alias("src"),
-        F.lpad(F.col("id_b").cast("string"), 10, "0").alias("dst"),
-    )
-    assign, _ = connected_components(edges)
+    assign, _ = connected_components(_exact_edges(docs))
     members = docs.select(
-        F.lpad(F.col("doc_id").cast("string"), 10, "0").alias("url"), "n_chars"
+        _padded("doc_id").alias("url"), "n_chars"
     )
     clustered = assign_clusters(members, assign)
     flagged = golden_records(clustered, freshness_col="n_chars")

@@ -178,7 +178,7 @@ def test_score_features_join_is_shuffled_hash(spark):
         .where(F.col("url_a") < F.col("url_b"))
         .limit(50)
     )
-    scored, _edges = score_pairs(pairs, feats)
+    scored = score_pairs(pairs, feats)
     p = plan_of(scored)
     assert "ShuffledHashJoin" in p or "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p

@@ -18,7 +18,11 @@ from mdmpublic_spark.functions.text import (
     tokens_expr,
 )
 from mdmpublic_spark.operators.blocking import block_keys
-from mdmpublic_spark.operators.pairs import PairGenStats, candidate_pairs
+from mdmpublic_spark.operators.pairs import (
+    PairGenStats,
+    candidate_pairs,
+    delta_candidate_pairs,
+)
 from mdmpublic_spark.tables import Table
 
 
@@ -142,18 +146,50 @@ def test_expire_snapshots_drops_old_data(spark, tmp_path):
 
 
 def test_candidate_pairs_shuffle_path_matches_broadcast(spark):
+    """Both membership-join paths (broadcast and shuffle) give the same
+    pairs, for the small and the hot block class; and a delta batch
+    holding every url regenerates exactly the full run's pairs through
+    the same pair-join tail."""
     rows = [(f"u{i:03d}", "k1") for i in range(8)] + [
         (f"v{i:03d}", "k2") for i in range(3)
-    ] + [("w1", "lonely")]
+    ] + [("w1", "lonely"), ("u000", "k3"), ("u001", "k3")]
     blocked = spark.createDataFrame(rows, "url string, block_key string")
-    s_b, s_s = PairGenStats(), PairGenStats()
-    broadcast = candidate_pairs(blocked, stats=s_b)
-    shuffle = candidate_pairs(blocked, stats=s_s, membership_broadcast_limit=0)
-    a = {(r["url_a"], r["url_b"]) for r in broadcast.collect()}
-    b = {(r["url_a"], r["url_b"]) for r in shuffle.collect()}
-    assert a == b
-    assert len(a) == 8 * 7 // 2 + 3
-    assert vars(s_b) == vars(s_s)
+    every_url = blocked.select("url").distinct()
+
+    def url_pairs(df):
+        got = [(r["url_a"], r["url_b"]) for r in df.collect()]
+        assert len(got) == len(set(got))
+        return set(got)
+
+    expected = None
+    for hot_below in (200, 5):  # 5 < k1's 8 members: k1 runs as a hot block
+        s_b, s_s = PairGenStats(), PairGenStats()
+        broadcast = url_pairs(
+            candidate_pairs(blocked, broadcast_threshold=hot_below, stats=s_b)
+        )
+        shuffle = url_pairs(
+            candidate_pairs(
+                blocked,
+                broadcast_threshold=hot_below,
+                stats=s_s,
+                membership_broadcast_limit=0,
+            )
+        )
+        assert broadcast == shuffle
+        assert vars(s_b) == vars(s_s)
+        assert s_b.hot_blocks == (1 if hot_below == 5 else 0)
+        expected = expected or broadcast
+        assert broadcast == expected
+        for limit in (0, 10):
+            delta = delta_candidate_pairs(
+                blocked,
+                every_url,
+                broadcast_threshold=hot_below,
+                membership_broadcast_limit=limit,
+            )
+            assert url_pairs(delta) == broadcast
+    # k3 repeats the pair (u000, u001) of k1: counted once
+    assert len(expected) == 8 * 7 // 2 + 3
 
 
 def test_candidate_pairs_stats_without_key_collect(spark):
@@ -246,7 +282,7 @@ def test_jvm_scoring_bit_equals_python_udf(spark, corpus_dir):
     pages = dedup_latest(extract_pages(spark.read.parquet(f"{corpus_dir}/pages.parquet")))
     feats = page_features(pages)
     pairs = candidate_pairs(block_keys(pages)).limit(3000)
-    scored, _ = score_pairs(pairs, feats)
+    scored = score_pairs(pairs, feats)
 
     fa = feats.select(
         F.col("url").alias("url_a"), F.col("title").alias("title_a"),
@@ -284,7 +320,7 @@ def test_score_pairs_optional_embedding_cosine(spark):
     pairs = spark.createDataFrame(
         [("a1", "a2"), ("b1", "b2"), ("c1", "c2")], "url_a string, url_b string"
     )
-    base, _ = score_pairs(pairs, feats)
+    base = score_pairs(pairs, feats)
     b = {(r["url_a"], r["url_b"]): r["score"] for r in base.collect()}
 
     # a-pair: parallel embeddings (cos 1); b-pair: orthogonal (cos 0);
@@ -298,7 +334,7 @@ def test_score_pairs_optional_embedding_cosine(spark):
         ],
         "url string, embedding array<double>",
     )
-    blended, _ = score_pairs(pairs, feats, embeddings=emb, w_cos=0.25)
+    blended = score_pairs(pairs, feats, embeddings=emb, w_cos=0.25)
     rows = {(r["url_a"], r["url_b"]): r for r in blended.collect()}
     assert rows[("a1", "a2")]["cos_emb"] == 1.0
     assert rows[("b1", "b2")]["cos_emb"] == 0.0

@@ -137,6 +137,29 @@ def test_minhash_pairs_verified_jaccard(spark, docs):
         assert r["inter_n"] * 100 >= 50 * r["union_n"]
 
 
+def test_minhash_pairs_threshold_is_exact(spark):
+    """The verify threshold is the exact rational p/q: a token-Jaccard
+    14/25 = 0.56 pair is emitted at 0.56 and not at 0.57 (a threshold
+    truncated to int(0.57 * 100) == 56 percent would let it through)."""
+    shared = [f"s{i}" for i in range(14)]
+    df = spark.createDataFrame(
+        [
+            (1, " ".join(shared + [f"a{i}" for i in range(6)])),  # 20 tokens
+            (2, " ".join(shared + [f"b{i}" for i in range(5)])),  # 19 tokens
+        ],
+        "doc_id long, text string",
+    )
+
+    def pairs(t):
+        rows = dedup.minhash_lsh_pairs(
+            df, threshold=t, n_bands=64, n_rows=1, sketch="token", verify="token"
+        ).collect()
+        return {(r["id_a"], r["id_b"], r["inter_n"], r["union_n"]) for r in rows}
+
+    assert pairs(0.56) == {(1, 2, 14, 25)}
+    assert pairs(0.57) == set()
+
+
 def test_token_sketch_catches_word_reordered_dups(spark):
     """The round-5 order-insensitive arm: a bag-of-words-identical pair
     with shuffled word order has shingle-Jaccard ~0 (no shared 3-word
