@@ -131,12 +131,10 @@ def incremental_update(
     stage = lambda s: f"inc-{batch_id}.{s}"  # noqa: E731
 
     # ---- 1. delta extract (same deterministic path as the full run)
-    par = spark.sparkContext.defaultParallelism
-
     d_extract_t = runner.run_stage(
         stage("extract"),
         lambda: dedup_latest(
-            extract_pages(spark.read.parquet(new_pages_path).repartition(par))
+            extract_pages(spark.read.parquet(new_pages_path).hint("rebalance"))
         ),
         config={"src": new_pages_path},
     )

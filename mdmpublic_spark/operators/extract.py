@@ -38,8 +38,12 @@ def extract_pages(raw: DataFrame) -> DataFrame:
 
 
 def dedup_latest(pages: DataFrame) -> DataFrame:
-    """Latest capture per url (exact url-level dedup, W3 latest-per-group)."""
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
+    """Latest capture per url (exact url-level dedup, W3 latest-per-group).
+    Captures with equal warc_ts are ordered by content, so the winner does
+    not depend on row order or partitioning."""
+    w = Window.partitionBy("url").orderBy(
+        F.desc("warc_ts"), F.asc("text"), F.asc("title"), F.asc("lang")
+    )
     return (
         pages.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
     )

@@ -83,28 +83,9 @@ def run_pipeline(
     wall_t0 = _time.time()
     # per-stage fingerprint configs hold ONLY the knobs that stage reads,
     # so e.g. a threshold change re-runs nothing upstream of clustering
-    #
-    # Input parallelism: a small corpus may live in a single parquet file,
-    # which Spark scans as ONE task (maxPartitionBytes splitting only helps
-    # large files) — the whole extract/LSH map path would run on one core.
-    # Explicitly spread the scan across the shuffle parallelism; on a
-    # real cluster with many input files this repartition coalesces to a
-    # no-op-sized shuffle relative to the UDF work it unlocks.
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    raw = spark.read.parquet(pages_path).repartition(par)
-
-    def _spread(df: DataFrame) -> DataFrame:
-        """Guarantee map-side parallelism ≥ the cluster width for
-        UDF-heavy consumers of a stage table. Parquet scans bin-pack
-        small files (openCostInBytes), so a sandbox-scale table reads
-        as a handful of splits no matter how many cores exist — the
-        minhash/feature map stages then run 8-wide at any cluster size.
-        At 100 TB the scan yields ≫cores splits and this is a no-op;
-        the check is plan-time only (no job)."""
-        width = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < width:
-            return df.repartition(width)
-        return df
+    # a one-file input scans as one task; the rebalance lets AQE size the
+    # extract map to the input's bytes (session.py has the sizing rule)
+    raw = spark.read.parquet(pages_path).hint("rebalance")
 
     # 1. extract — deterministic html→text, newest capture per url
     extracted_t = runner.run_stage(
@@ -112,7 +93,7 @@ def run_pipeline(
         lambda: dedup_latest(extract_pages(raw)),
         config={"src": pages_path},
     )
-    extracted = _spread(extracted_t.read(spark))
+    extracted = extracted_t.read(spark)
 
     # 2a. profile — corpus-adaptive boilerplate ("stop shingles") by DF
     def _profile() -> DataFrame:

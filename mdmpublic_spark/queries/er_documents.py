@@ -29,15 +29,7 @@ def _padded(id_col: str):
 
 
 def documents_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-file inputs scan as one task — spread the UDF-heavy map path
-    # across the cluster width (defaultParallelism = task slots), NOT the
-    # shuffle partition count: shuffle.partitions sizes reduce-side
-    # working sets (256 here), but a *map* stage at 256 partitions costs
-    # 8x the task floors of a 32-slot sandbox for zero extra overlap —
-    # measured 4.3s of almost-pure scheduling/Python-worker wait on the
-    # blocked relation's widest consumer before this distinction
-    par = spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").hint("rebalance")
     return docs.select(
         F.concat(
             F.lit("doc://"),

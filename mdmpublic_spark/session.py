@@ -6,9 +6,8 @@ Scale notes (design target: 1000-executor cluster, ~100 TB input):
   * Arrow on — every Python crossing is a vectorized pandas UDF batch.
   * UTC session timezone — timestamp determinism across machines/locales
     (the byte-identical-extraction invariant extends to derived columns).
-  * shuffle.partitions defaults to the local core count in the sandbox; on a
-    real cluster set it via conf to ~2-3x total cores (or rely on AQE
-    coalescing from a high initial value).
+  * Partition sizing: code passes no partition count, AQE sizes every
+    shuffle (cached ones included), and minPartitionNum floors scans.
 """
 
 from __future__ import annotations
@@ -126,6 +125,10 @@ def get_spark(
         # above), big shuffles are unaffected by the floor: 256 stays 256.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "33554432")
+        # let AQE coalesce persisted aggregates (pairs.py's block sizes)
+        # and the localCheckpoints built on them; off, every action on a
+        # cached shuffle runs spark.sql.shuffle.partitions tasks
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # NB: shuffled-hash join preference is NOT set session-wide —
         # shuffled-hash cannot spill its build side, so a global default
         # risks executor OOM on misestimated/skewed partitions at the

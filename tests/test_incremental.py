@@ -250,11 +250,9 @@ def test_delta_pairs_cap_crossing_detected(spark):
     assert pairs == {("u10", "u8"), ("u10", "u9")}
 
 
-def test_insert_only_batch_equals_full(spark, tmp_path_factory):
-    """The append fast path (no changed urls → no dissolution, fast
-    appends everywhere) must also match a frozen-profile full recompute
-    exactly."""
-    root = tmp_path_factory.mktemp("inc-insert")
+def _insert_only_inputs(spark, root) -> tuple[str, str, str]:
+    """(base, delta, union) pages paths: a 400-page corpus split by a
+    1-in-5 url-hash slice, so the delta holds only new urls."""
     corpus = str(root / "corpus")
     generate_corpus(corpus, n_pages=400, seed=5)
     pages = spark.read.parquet(os.path.join(corpus, "pages.parquet"))
@@ -267,6 +265,15 @@ def test_insert_only_batch_equals_full(spark, tmp_path_factory):
     pages.where(~in_delta).write.parquet(base_path)
     pages.where(in_delta).write.parquet(delta_path)
     pages.write.parquet(union_path)
+    return base_path, delta_path, union_path
+
+
+def test_insert_only_batch_equals_full(spark, tmp_path_factory):
+    """The append fast path (no changed urls → no dissolution, fast
+    appends everywhere) must also match a frozen-profile full recompute
+    exactly."""
+    root = tmp_path_factory.mktemp("inc-insert")
+    base_path, delta_path, union_path = _insert_only_inputs(spark, root)
 
     caps = {"d:": 400}
     wd = str(root / "wd")
@@ -290,3 +297,46 @@ def test_insert_only_batch_equals_full(spark, tmp_path_factory):
     x = {tuple(r) for r in Table(os.path.join(wd, "score")).read(spark).select(*sc).collect()}
     y = {tuple(r) for r in Table(os.path.join(wd_full, "score")).read(spark).select(*sc).collect()}
     assert x == y
+
+
+def test_stage_widths_follow_data_not_shuffle_partitions(spark, tmp_path_factory):
+    """At a shuffle-partition count far above the task slots, a run and a
+    fold of a small corpus keep every Spark stage within twice the
+    default parallelism: AQE sizes each shuffle and cached aggregate to
+    its data, and no stage width comes from the shuffle-partition
+    constant."""
+    import time
+
+    root = tmp_path_factory.mktemp("inc-widths")
+    base_path, delta_path, _ = _insert_only_inputs(spark, root)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "stage-widths"
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "256")
+    try:
+        sc.setJobGroup(group, "run + fold at 256 shuffle partitions")
+        wd = str(root / "wd")
+        run_pipeline(spark, base_path, wd, PipelineConfig())
+        incremental_update(spark, delta_path, wd, PipelineConfig())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    # the status store is fed asynchronously: wait until every job of
+    # the group has ended before reading its stages
+    deadline = time.time() + 30
+    while time.time() < deadline and any(
+        tracker.getJobInfo(j) is None or tracker.getJobInfo(j).status == "RUNNING"
+        for j in tracker.getJobIdsForGroup(group)
+    ):
+        time.sleep(0.1)
+    job_ids = tracker.getJobIdsForGroup(group)
+    assert job_ids
+    cap = 2 * sc.defaultParallelism
+    wide = {}
+    for j in job_ids:
+        for sid in tracker.getJobInfo(j).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None and info.numTasks > cap:
+                wide[sid] = (info.name, info.numTasks)
+    assert wide == {}

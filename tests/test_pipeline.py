@@ -127,7 +127,7 @@ def test_clusters_deterministic_across_parallelism(spark, corpus_dir, tmp_path):
     small = str(tmp_path / "corpus-small")
     generate_corpus(small, n_pages=400)
     outs = []
-    for par, sub in ((2, "p2"), (8, "p8")):
+    for par, sub in ((2, "p2"), (8, "p8"), (256, "p256")):
         work = str(tmp_path / sub)
         spark.conf.set("spark.sql.shuffle.partitions", str(par))
         try:
@@ -142,4 +142,4 @@ def test_clusters_deterministic_across_parallelism(spark, corpus_dir, tmp_path):
             .collect()
         )
         outs.append([tuple(r) for r in rows])
-    assert outs[0] == outs[1]
+    assert outs[0] == outs[1] == outs[2]

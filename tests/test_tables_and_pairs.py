@@ -271,6 +271,25 @@ def test_cc_driver_collect_budget_is_bytes_aware(spark):
     assert a == b and len({c for _, c in a}) == 1
 
 
+def test_dedup_latest_breaks_timestamp_ties_on_content(spark):
+    """Two captures of one url with equal warc_ts: the same capture wins
+    whatever the row order and the partitioning (a task retry or a
+    different cluster width cannot flip the surviving text)."""
+    import datetime
+
+    from mdmpublic_spark.operators.extract import dedup_latest
+
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [("u", ts, "text A", "t", "en"), ("u", ts, "text B", "t", "en")]
+    schema = "url string, warc_ts timestamp, text string, title string, lang string"
+    winners = set()
+    for order in (rows, rows[::-1]):
+        for n in (1, 2):
+            df = spark.createDataFrame(order, schema).repartition(n)
+            winners |= {r["text"] for r in dedup_latest(df).collect()}
+    assert winners == {"text A"}
+
+
 def test_jvm_scoring_bit_equals_python_udf(spark, corpus_dir):
     """The JVM-expression score path (array_intersect + levenshtein built-in
     + JW-only UDF) must reproduce the all-Python scoring UDF bit-for-bit:
