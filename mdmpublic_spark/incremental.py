@@ -225,11 +225,8 @@ def incremental_update(
         },
         inputs=[d_block_t],
     )
-    metrics.add(stage("pairs"), "oversize_blocks", pair_stats.oversize_blocks)
-    metrics.add(stage("pairs"), "grandfathered_blocks", pair_stats.grandfathered_blocks)
-    metrics.add(
-        stage("pairs"), "grandfathered_pairs_est", pair_stats.grandfathered_pairs_est
-    )
+    for key, value in vars(pair_stats).items():
+        metrics.add(stage("pairs"), key, value)
 
     # ---- 6. delta features + merge
     d_feat_t = runner.run_stage(

@@ -12,8 +12,10 @@ pairs, so skew is *quadratic* — one 10⁵-page domain means 5×10⁹ pairs.
 AQE's skew-join splitting only rebalances the shuffle; it cannot undo
 B². Policy here, in order:
 
-  1. **Size profile** — one groupBy(block_key).count() (map-side partial
-     agg; output is O(distinct keys)).
+  1. **Size profile** — one groupBy(block_key) (map-side partial agg;
+     output is O(distinct keys)), materialized once; one collect of
+     ≤ 3 rows, one per class, fills the stats. The run and the delta
+     fold share it (``_admit``).
   2. **Cap** — blocks with count > max_block_size are *dropped from pair
      generation* with a logged counter (never silently; the
      dropped-pairs count goes to metrics). Members remain reachable via
@@ -42,7 +44,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 @dataclass
 class PairGenStats:
-    candidate_pairs: int = 0
     oversize_blocks: int = 0
     dropped_pairs_est: int = 0
     hot_blocks: int = 0
@@ -68,82 +69,79 @@ def _cap_expr(max_block_size: int, prefix_caps: dict[str, int] | None):
     return cap
 
 
-def _classify_blocks(
-    blocked: DataFrame,
+def _tag(df: DataFrame, n: Column | int, d: Column | int, pc: Column | int) -> DataFrame:
+    """(block_key, n, d, pc) admission rows of ``df`` (see ``_admit``)."""
+    return df.select(
+        "block_key", F.lit(n).alias("n"), F.lit(d).alias("d"), F.lit(pc).alias("pc")
+    )
+
+
+def _admit(
+    members: DataFrame,
     max_block_size: int,
     broadcast_threshold: int,
     prefix_caps: dict[str, int] | None,
     stats: PairGenStats | None,
 ):
-    """Size-profile + classify every joinable block: (block_key, cls) with
-    cls ∈ {small, hot}; oversize blocks are excluded (dropped from pair
-    generation, counted in ``stats``). Returns (classified_df,
-    n_joinable, n_hot); the classified table is localCheckpoint-
-    materialized so membership joins don't re-aggregate ``blocked``."""
-    # the size profile feeds two actions (the class-stats aggregate and
-    # the classification checkpoint); persist so blocked is scanned and
-    # aggregated once, then unpersist immediately after both actions —
-    # nothing in the returned plan references it
-    sizes = blocked.groupBy("block_key").agg(F.count(F.lit(1)).alias("n")).persist()
-    out = _classify_sizes(sizes, max_block_size, broadcast_threshold, prefix_caps, stats)
-    sizes.unpersist()
-    return out
+    """The admission pass shared by the run and the fold. ``members`` has
+    one row per membership, (block_key, n, d, pc): ``n`` = 1 for a row of
+    the combined table, ``d`` = 1 for a delta url's row, ``pc`` = 1 for a
+    pre-batch row of a changed url (absent from the combined table).
 
-
-def _classify_sizes(
-    sizes: DataFrame,
-    max_block_size: int,
-    broadcast_threshold: int,
-    prefix_caps: dict[str, int] | None,
-    stats: PairGenStats | None,
-    restrict_to: DataFrame | None = None,
-):
-    """Classification over a pre-aggregated (block_key, n) size profile
-    (persisted by the caller, who may reuse it for other aggregates).
-    ``restrict_to`` (a block_key df) prunes the MATERIALIZED
-    classification table to those keys — the profile stats stay global
-    (the admission policy is corpus-wide), but a delta batch only ever
-    joins against the blocks it touches, so checkpointing the rest would
-    be O(corpus-distinct-keys) of wasted memory per batch."""
-    cap_expr = _cap_expr(max_block_size, prefix_caps)
-
-    prof = (
-        sizes.where(F.col("n") > 1)
+    One aggregate profiles every block: its class over the combined size
+    (oversize / hot / small), its pairs, whether the batch touches it,
+    and its cap crossing — a block the batch pushed past the cap whose
+    prior size n − n_d + n_pc had pairs under it. The profile is
+    materialized once; one collect of ≤ 3 rows, one per class (never a
+    per-key collect), fills ``stats`` and counts the joinable keys.
+    Returns (keep, n_joinable, n_hot): the touched, non-oversize
+    (block_key, cls) rows, their count, and how many of them are hot."""
+    cap = _cap_expr(max_block_size, prefix_caps)
+    n, n_d = F.col("n"), F.col("n_d")
+    n_prior = n - n_d + F.col("n_pc")
+    profile = (
+        members.groupBy("block_key")
+        .agg(F.sum("n").alias("n"), F.sum("d").alias("n_d"), F.sum("pc").alias("n_pc"))
+        .where(n > 1)
         .select(
             "block_key",
-            "n",
-            F.when(F.col("n") > cap_expr, "oversize")
-            .when(F.col("n") > broadcast_threshold, "hot")
+            F.when(n > cap, "oversize")
+            .when(n > broadcast_threshold, "hot")
             .otherwise("small")
             .alias("cls"),
+            (n * (n - 1) / 2).alias("pairs"),
+            (n_d > 0).alias("touched"),
+            F.when(
+                (n > cap) & (n_prior > 1) & (n_prior <= cap), n_prior * (n_prior - 1) / 2
+            ).alias("crossed"),
         )
+        .localCheckpoint(eager=True)
     )
-    # --- profile stats: one distributed aggregate, ≤3 rows collected ---
-    # (never a per-key collect — a pathological key distribution cannot
-    # OOM the driver)
-    cls_rows = {
+    by_cls = {
         r["cls"]: r
-        for r in prof.groupBy("cls")
+        for r in profile.groupBy("cls")
         .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("pairs"),
+            F.count(F.lit(1)).alias("blocks"),
+            F.sum("pairs").alias("pairs"),
+            F.count_if("touched").alias("touched"),
+            F.count("crossed").alias("crossed"),
+            F.sum("crossed").alias("crossed_pairs"),
         )
         .collect()
     }
-    n_joinable = sum(int(r["k"]) for r in cls_rows.values())
-    n_hot = int(cls_rows["hot"]["k"]) if "hot" in cls_rows else 0
-    if stats is not None:
-        stats.oversize_blocks = int(cls_rows["oversize"]["k"]) if "oversize" in cls_rows else 0
-        stats.hot_blocks = n_hot
-        stats.dropped_pairs_est = (
-            int(cls_rows["oversize"]["pairs"]) if "oversize" in cls_rows else 0
-        )
 
-    keep = prof.where(F.col("cls") != "oversize").select("block_key", "cls")
-    if restrict_to is not None:
-        keep = keep.join(restrict_to.hint("broadcast"), "block_key", "left_semi")
-    classified = keep.localCheckpoint(eager=True)
-    return classified, n_joinable, n_hot
+    def total(cls: str, field: str) -> int:
+        return int(by_cls[cls][field] or 0) if cls in by_cls else 0
+
+    if stats is not None:
+        stats.oversize_blocks = total("oversize", "blocks")
+        stats.dropped_pairs_est = total("oversize", "pairs")
+        stats.hot_blocks = total("hot", "blocks")
+        stats.grandfathered_blocks = total("oversize", "crossed")
+        stats.grandfathered_pairs_est = total("oversize", "crossed_pairs")
+    n_hot = total("hot", "touched")
+    keep = profile.where(F.col("touched") & (F.col("cls") != "oversize"))
+    return keep.select("block_key", "cls"), n_hot + total("small", "touched"), n_hot
 
 
 def _membership(
@@ -209,10 +207,10 @@ def candidate_pairs(
     Returns the pair DataFrame; fills ``stats`` (driver-side scalars
     only — one 3-row aggregate collect, never a per-key collect).
     """
-    classified, n_joinable, n_hot = _classify_blocks(
-        blocked, max_block_size, broadcast_threshold, prefix_caps, stats
+    keep, n_joinable, n_hot = _admit(
+        _tag(blocked, 1, 1, 0), max_block_size, broadcast_threshold, prefix_caps, stats
     )
-    member = _membership(blocked, classified, n_joinable, membership_broadcast_limit)
+    member = _membership(blocked, keep, n_joinable, membership_broadcast_limit)
     a, b = F.col("a.url"), F.col("b.url")
     return _block_pairs(member, member, n_hot, a < b, a, b)
 
@@ -231,14 +229,14 @@ def delta_candidate_pairs(
     pair sharing a block where AT LEAST ONE side is a delta url.
 
     Cost model (the reason this is not a filtered candidate_pairs): the
-    only full-corpus work is ONE map-side-combined size aggregate over
-    ``blocked_all`` (O(distinct keys) output — the same admission
-    profile a full recompute computes). Everything downstream is pruned
-    to the blocks the delta touches BEFORE any shuffle: the touched-key
-    list (small — O(delta × keys/doc)) broadcast-semi-joins the big
-    membership side, so the pair join shuffles members of touched
-    blocks only, not the corpus. Old-old pairs are never regenerated;
-    the caller keeps their previously-scored rows.
+    only full-corpus work is ONE map-side-combined aggregate over
+    ``blocked_all`` — the admission profile a full recompute computes,
+    with each block's delta-membership count beside its size. Only
+    blocks the delta touches are joinable, so the membership join
+    (broadcast while those keys fit) drops every other block at the
+    scan, and the pair join shuffles members of touched blocks only,
+    not the corpus. Old-old pairs are never regenerated; the caller
+    keeps their previously-scored rows.
 
     Classification (cap / hot / small) runs over the COMBINED block
     sizes, so a batch never quietly grows a block past the admission
@@ -248,10 +246,9 @@ def delta_candidate_pairs(
     grandfathered by the caller rather than retracted: at the 10^12-doc
     design point, un-matching existing masters because a block crossed
     an admission threshold would regress recall on untouched records.
-    Crossings are DERIVED, not rescanned: prior_size = combined_size −
-    delta_memberships + prior_memberships_of_changed_urls, so detection
-    costs one small join against the touched-key aggregate instead of a
-    second full-table scan. ``prior_changed`` = the PRE-batch (url,
+    Crossings come from the same profile: prior_size = combined_size −
+    delta_memberships + prior_memberships_of_changed_urls, with no
+    second scan of the prior table. ``prior_changed`` = the PRE-batch (url,
     block_key) rows of urls whose capture changed (None/empty for
     insert-only batches — the common crawl-append case). Every crossing
     lands in ``stats.grandfathered_blocks`` / ``grandfathered_pairs_est``
@@ -260,57 +257,20 @@ def delta_candidate_pairs(
     ``n_keys`` counts generating (delta-membership, block) events, not
     the full run's per-pair key count — downstream scoring ignores it.
     """
-    sizes = (
-        blocked_all.groupBy("block_key").agg(F.count(F.lit(1)).alias("n")).persist()
-    )
-
     d = delta_urls.select("url").distinct()
-    # delta memberships (url, block_key): the batch is small relative to
-    # the corpus by construction, so its url list rides a broadcast hash
-    # join; a mega-batch degrades to a shuffle join via Catalyst's size
-    # estimate (hint, not forced broadcast)
-    dm_all = blocked_all.join(d.hint("broadcast"), "url")
-    # the touched-key list is reused three times (classification prune,
-    # crossing join, membership prune): materialize once
-    touched = dm_all.select("block_key").distinct().localCheckpoint(eager=True)
-
-    classified, n_joinable, n_hot = _classify_sizes(
-        sizes,
-        max_block_size,
-        broadcast_threshold,
-        prefix_caps,
-        stats,
-        restrict_to=touched,
+    # the batch is small relative to the corpus by construction, so its
+    # url list rides a broadcast hash join; a mega-batch degrades to a
+    # shuffle join via Catalyst's size estimate (hint, not forced broadcast)
+    flagged = blocked_all.join(
+        d.withColumn("d", F.lit(1)).hint("broadcast"), "url", "left"
     )
-
-    if stats is not None:
-        cap_expr = _cap_expr(max_block_size, prefix_caps)
-        deltas = dm_all.groupBy("block_key").agg(F.count(F.lit(1)).alias("n_d"))
-        j = sizes.join(deltas.hint("broadcast"), "block_key")
-        if prior_changed is not None:
-            pc = prior_changed.groupBy("block_key").agg(
-                F.count(F.lit(1)).alias("n_pc")
-            )
-            j = j.join(pc.hint("broadcast"), "block_key", "left").na.fill({"n_pc": 0})
-        else:
-            j = j.withColumn("n_pc", F.lit(0))
-        n_prior = F.col("n") - F.col("n_d") + F.col("n_pc")
-        crossed = (
-            j.where((n_prior > 1) & (n_prior <= cap_expr) & (F.col("n") > cap_expr))
-            .agg(
-                F.count(F.lit(1)).alias("k"),
-                F.sum(n_prior * (n_prior - 1) / 2).alias("pairs"),
-            )
-            .first()
-        )
-        stats.grandfathered_blocks = int(crossed["k"] or 0)
-        stats.grandfathered_pairs_est = int(crossed["pairs"] or 0)
-    sizes.unpersist()
-
-    # prune the big side to delta-touched blocks BEFORE anything
-    # shuffles: broadcast semi-join, evaluated map-side at the scan
-    pruned = blocked_all.join(touched.hint("broadcast"), "block_key", "left_semi")
-    member = _membership(pruned, classified, n_joinable, membership_broadcast_limit)
+    members = _tag(flagged, 1, F.coalesce("d", F.lit(0)), 0)
+    if prior_changed is not None:
+        members = members.unionByName(_tag(prior_changed, 0, 0, 1))
+    keep, n_joinable, n_hot = _admit(
+        members, max_block_size, broadcast_threshold, prefix_caps, stats
+    )
+    member = _membership(blocked_all, keep, n_joinable, membership_broadcast_limit)
     dm = member.join(d.hint("broadcast"), "url")
     # a delta-delta pair is found from both sides: least/greatest orients
     # it, and the dedup tail folds the two copies

@@ -132,9 +132,8 @@ def run_pipeline(
         config={"max_block_size": cfg.max_block_size, "prefix_caps": cfg.prefix_caps},
         inputs=[blocked_t],
     )
-    metrics.add("pairs", "oversize_blocks", pair_stats.oversize_blocks)
-    metrics.add("pairs", "dropped_pairs_est", pair_stats.dropped_pairs_est)
-    metrics.add("pairs", "hot_blocks", pair_stats.hot_blocks)
+    for key, value in vars(pair_stats).items():
+        metrics.add("pairs", key, value)
 
     # 4a. features — narrow scoring projection, materialized ONCE: the
     # score join reads it twice (a/b sides); recomputing the hashed

@@ -7,7 +7,7 @@ Scale notes (design target: 1000-executor cluster, ~100 TB input):
   * UTC session timezone — timestamp determinism across machines/locales
     (the byte-identical-extraction invariant extends to derived columns).
   * Partition sizing: code passes no partition count, AQE sizes every
-    shuffle (cached ones included), and minPartitionNum floors scans.
+    shuffle, and minPartitionNum floors scans.
 """
 
 from __future__ import annotations
@@ -125,10 +125,6 @@ def get_spark(
         # above), big shuffles are unaffected by the floor: 256 stays 256.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "33554432")
-        # let AQE coalesce persisted aggregates (pairs.py's block sizes)
-        # and the localCheckpoints built on them; off, every action on a
-        # cached shuffle runs spark.sql.shuffle.partitions tasks
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # NB: shuffled-hash join preference is NOT set session-wide —
         # shuffled-hash cannot spill its build side, so a global default
         # risks executor OOM on misestimated/skewed partitions at the

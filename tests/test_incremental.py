@@ -219,8 +219,9 @@ def test_incremental_rerun_is_noop(spark, inc):
 def test_delta_pairs_cap_crossing_detected(spark):
     """A block pushed past the cap by the batch yields NO new pairs and
     is counted as grandfathered (derived from combined sizes minus delta
-    memberships — no prior-table scan); a block still under the cap
-    yields only delta-touching pairs (old-old pairs never regenerate)."""
+    memberships plus the changed urls' prior memberships — no prior-table
+    scan); a block still under the cap yields only delta-touching pairs
+    (old-old pairs never regenerate)."""
     prior = spark.createDataFrame(
         [(f"u{i}", "k") for i in range(5)] + [("u8", "m"), ("u9", "m")],
         "url string, block_key string",
@@ -248,6 +249,33 @@ def test_delta_pairs_cap_crossing_detected(spark):
     assert stats.grandfathered_pairs_est == 10  # C(5,2) previously scored
     # block m: u8,u9 prior + u10 delta → only pairs touching u10
     assert pairs == {("u10", "u8"), ("u10", "u9")}
+
+    # a recaptured url leaves k: k held u0..u5 (6, at the cap) before the
+    # batch; u5 now keys only to m (with u8), and new u6, u7 join k
+    all_blocked = spark.createDataFrame(
+        [(f"u{i}", "k") for i in (0, 1, 2, 3, 4, 6, 7)] + [("u5", "m"), ("u8", "m")],
+        "url string, block_key string",
+    )
+    prior_changed = spark.createDataFrame([("u5", "k")], "url string, block_key string")
+    delta_urls = spark.createDataFrame([("u5",), ("u6",), ("u7",)], "url string")
+    stats = PairGenStats()
+    pairs = {
+        (r["url_a"], r["url_b"])
+        for r in delta_candidate_pairs(
+            all_blocked,
+            delta_urls,
+            max_block_size=6,
+            broadcast_threshold=100,
+            stats=stats,
+            prefix_caps=None,
+            prior_changed=prior_changed,
+        ).collect()
+    }
+    # block k: 7 now > cap 6; prior size 7 - 2 delta + 1 retracted = 6
+    assert stats.oversize_blocks == 1
+    assert stats.grandfathered_blocks == 1
+    assert stats.grandfathered_pairs_est == 6 * 5 // 2
+    assert pairs == {("u5", "u8")}
 
 
 def _insert_only_inputs(spark, root) -> tuple[str, str, str]:
@@ -302,9 +330,8 @@ def test_insert_only_batch_equals_full(spark, tmp_path_factory):
 def test_stage_widths_follow_data_not_shuffle_partitions(spark, tmp_path_factory):
     """At a shuffle-partition count far above the task slots, a run and a
     fold of a small corpus keep every Spark stage within twice the
-    default parallelism: AQE sizes each shuffle and cached aggregate to
-    its data, and no stage width comes from the shuffle-partition
-    constant."""
+    default parallelism: AQE sizes each shuffle to its data, and no
+    stage width comes from the shuffle-partition constant."""
     import time
 
     root = tmp_path_factory.mktemp("inc-widths")

@@ -147,9 +147,10 @@ def test_expire_snapshots_drops_old_data(spark, tmp_path):
 
 def test_candidate_pairs_shuffle_path_matches_broadcast(spark):
     """Both membership-join paths (broadcast and shuffle) give the same
-    pairs, for the small and the hot block class; and a delta batch
-    holding every url regenerates exactly the full run's pairs through
-    the same pair-join tail."""
+    pairs, for the small and the hot block class and with an oversize
+    block dropped; and a delta batch holding every url regenerates
+    exactly the full run's pairs and stats through the same admission
+    pass and pair-join tail."""
     rows = [(f"u{i:03d}", "k1") for i in range(8)] + [
         (f"v{i:03d}", "k2") for i in range(3)
     ] + [("w1", "lonely"), ("u000", "k3"), ("u001", "k3")]
@@ -161,15 +162,19 @@ def test_candidate_pairs_shuffle_path_matches_broadcast(spark):
         assert len(got) == len(set(got))
         return set(got)
 
-    expected = None
-    for hot_below in (200, 5):  # 5 < k1's 8 members: k1 runs as a hot block
+    expected = {}
+    # 5 < k1's 8 members: k1 runs as a hot block; cap 7 drops it
+    for hot_below, cap in ((200, 2000), (5, 2000), (200, 7)):
         s_b, s_s = PairGenStats(), PairGenStats()
         broadcast = url_pairs(
-            candidate_pairs(blocked, broadcast_threshold=hot_below, stats=s_b)
+            candidate_pairs(
+                blocked, max_block_size=cap, broadcast_threshold=hot_below, stats=s_b
+            )
         )
         shuffle = url_pairs(
             candidate_pairs(
                 blocked,
+                max_block_size=cap,
                 broadcast_threshold=hot_below,
                 stats=s_s,
                 membership_broadcast_limit=0,
@@ -178,18 +183,27 @@ def test_candidate_pairs_shuffle_path_matches_broadcast(spark):
         assert broadcast == shuffle
         assert vars(s_b) == vars(s_s)
         assert s_b.hot_blocks == (1 if hot_below == 5 else 0)
-        expected = expected or broadcast
-        assert broadcast == expected
+        assert s_b.oversize_blocks == (1 if cap == 7 else 0)
+        assert s_b.dropped_pairs_est == (8 * 7 // 2 if cap == 7 else 0)
+        assert broadcast == expected.setdefault(cap, broadcast)
         for limit in (0, 10):
+            s_d = PairGenStats()
             delta = delta_candidate_pairs(
                 blocked,
                 every_url,
+                max_block_size=cap,
                 broadcast_threshold=hot_below,
+                stats=s_d,
                 membership_broadcast_limit=limit,
             )
             assert url_pairs(delta) == broadcast
+            assert vars(s_d) == vars(s_b)
     # k3 repeats the pair (u000, u001) of k1: counted once
-    assert len(expected) == 8 * 7 // 2 + 3
+    assert len(expected[2000]) == 8 * 7 // 2 + 3
+    # with k1 dropped, its pair (u000, u001) stays reachable through k3
+    assert expected[7] == {
+        ("v000", "v001"), ("v000", "v002"), ("v001", "v002"), ("u000", "u001")
+    }
 
 
 def test_candidate_pairs_stats_without_key_collect(spark):
