@@ -232,8 +232,10 @@ def production_edge_recall(spark, sf_dir) -> dict:
     J ≥ 0.8). Only the banding differs between the two runs, so the
     ratio isolates the knob; the 21×3 S-curve predicts ≥ 0.999 here.
 
-    ``lsh_vs_token_truth_recall`` gates the COMBINED near-dup candidate
-    passes — production 21×3 shingle-sketch edges ∪ the order-insensitive
+    ``lsh_vs_token_truth_recall_combined`` gates the COMBINED near-dup
+    candidate passes (rounds 2–4 published the shingle-only number under
+    ``lsh_vs_token_truth_recall``, so the gate has its own key) —
+    production 21×3 shingle-sketch edges ∪ the order-insensitive
     TOKEN-set-sketch candidates at the dup-targeted 8×8 banding (round-5
     arm) — against the exact TOKEN-Jaccard ≥ 0.95 set
     er_cc_jaccard_clusters hash-checks. Round 4 measured the shingle
@@ -284,7 +286,9 @@ def production_edge_recall(spark, sf_dir) -> dict:
         "production_edge_recall": round(n_found / n_truth, 4) if n_truth else 1.0,
         "shingle_truth_edges_t08": n_truth,
         "production_edges_matched": n_found,
-        "lsh_vs_token_truth_recall": round(n_combined / n_tok, 4) if n_tok else 1.0,
+        "lsh_vs_token_truth_recall_combined": (
+            round(n_combined / n_tok, 4) if n_tok else 1.0
+        ),
         "lsh_vs_token_truth_recall_shingle_only": (
             round(n_shingle_only / n_tok, 4) if n_tok else 1.0
         ),

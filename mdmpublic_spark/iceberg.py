@@ -132,7 +132,8 @@ class IcebergTable:
         """The expire_snapshots procedure; returns the count of expired
         snapshots (history length delta)."""
         catalog = self.name.split(".")[0]
-        ident = self.name[len(catalog) + 1 :]
+        # a SQL string literal: escape backslashes, then quotes
+        ident = self.name[len(catalog) + 1 :].replace("\\", "\\\\").replace("'", "\\'")
         before = len(self.history())
         self.spark.sql(
             f"CALL {_q(catalog)}.system.expire_snapshots("

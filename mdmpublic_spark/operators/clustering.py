@@ -104,6 +104,7 @@ def _union_find_assign(pairs: list[tuple[str, str]]) -> dict[str, str]:
 # induces. Measured with sys.getsizeof on 60-80 char url pairs: ~230-260 B
 # fixed + the url payload itself.
 _EDGE_FIXED_OVERHEAD = 240
+_MAX_CC_ROUNDS = 25  # star rounds are O(log n); this stops a non-converging loop
 
 
 def _ckpt_rdd(df: DataFrame):
@@ -118,7 +119,6 @@ def _ckpt_rdd(df: DataFrame):
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 25,
     reliable: bool = False,
     small_graph_threshold: int = 2_000_000,
     edge_count: int | None = None,
@@ -220,7 +220,7 @@ def connected_components(
         e = _own(e.localCheckpoint(eager=False)) if not reliable else e.checkpoint(eager=False)
     prev = _checksum(e)
     rounds = 0
-    for rounds in range(1, max_iter + 1):
+    for rounds in range(1, _MAX_CC_ROUNDS + 1):
         e2 = _small_star(_large_star(e))
         e2 = (
             _own(e2.localCheckpoint(eager=False))

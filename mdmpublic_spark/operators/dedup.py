@@ -486,9 +486,10 @@ def minhash_lsh_candidates(
         sigs = _token_hashes(docs, id_col).select(
             id_col, minhash_sig(shingle_hashes_from_token_hashes(F.col("th"))).alias("sig")
         )
+    # one exchange (AQE-sized) feeds both join sides: the signature UDF runs once
     banded = sigs.select(
         id_col, F.explode(band_keys_expr(F.col("sig"), n_bands, n_rows)).alias("band")
-    )
+    ).repartition("band")
     return (
         banded.alias("x")
         .join(banded.alias("y"), "band")
@@ -590,7 +591,7 @@ def simhash_pairs(
                 ]
             )
         ).alias("bucket"),
-    )
+    ).repartition("bucket")  # one shared exchange, as in minhash_lsh_candidates
     x = bands.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"), "bucket")
     y = bands.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"), "bucket")
     return (
@@ -599,7 +600,9 @@ def simhash_pairs(
         .withColumn(
             "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
         )
-        .where(F.col("hamming") <= max_hamming)
+        # coalesced: a null-intolerant test would infer isnotnull(sh) and
+        # push it below the UDF projection, evaluating the UDF twice
+        .where(F.coalesce("hamming", F.lit(64)) <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .distinct()
     )

@@ -181,7 +181,7 @@ def _block_pairs(
     pairs = join("small", broadcast_right=False)
     if n_hot:
         pairs = pairs.unionByName(join("hot", broadcast_right=True))
-    return pairs.groupBy("url_a", "url_b").agg(F.count(F.lit(1)).alias("n_keys"))
+    return pairs.distinct()
 
 
 def candidate_pairs(
@@ -253,9 +253,6 @@ def delta_candidate_pairs(
     insert-only batches — the common crawl-append case). Every crossing
     lands in ``stats.grandfathered_blocks`` / ``grandfathered_pairs_est``
     so the drift is observable and a periodic full re-block reconciles.
-
-    ``n_keys`` counts generating (delta-membership, block) events, not
-    the full run's per-pair key count — downstream scoring ignores it.
     """
     d = delta_urls.select("url").distinct()
     # the batch is small relative to the corpus by construction, so its

@@ -159,8 +159,6 @@ def fetch_distributed(
     timeout: float = 10.0,
     max_retries: int = 2,
     backoff: float = 0.5,
-    partition_by_host: bool = True,
-    host_partitions: int | None = None,
     host_failure_cap: int = 5,
     opener: Opener | None = None,
 ) -> DataFrame:
@@ -175,13 +173,11 @@ def fetch_distributed(
     * **bounded retry with backoff** — transport errors retry
       ``max_retries`` times at backoff·2^attempt seconds (gate failures
       never retry; see ``_fetch_one``).
-    * **per-host concurrency cap** — with ``partition_by_host`` (the
-      default) the url table hash-partitions on the url's host, so ALL
-      of a host's urls run in ONE task: at most one in-flight request
-      per host cluster-wide, regardless of executor count — a crawl
-      cannot hammer a single origin from a thousand tasks. Set
-      ``host_partitions`` to size the fetch stage (defaults to the
-      session's shuffle partitioning).
+    * **per-host concurrency cap** — the url table hash-partitions on
+      the url's host, so ALL of a host's urls run in ONE task: at most
+      one in-flight request per host cluster-wide, regardless of
+      executor count — a crawl cannot hammer a single origin from a
+      thousand tasks.
     * **per-host circuit breaker** — after ``host_failure_cap``
       CONSECUTIVE transport failures for one host, that host's remaining
       urls in the task are skipped with one logged line (with host
@@ -191,17 +187,10 @@ def fetch_distributed(
     """
     import pandas as pd
 
-    if partition_by_host:
-        # Column-based parse_url (no string interpolation — url_col may
-        # need quoting), lower-cased to match _host_of's breaker key.
-        host = F.lower(
-            F.coalesce(F.parse_url(F.col(url_col), F.lit("HOST")), F.lit(""))
-        )
-        urls_df = (
-            urls_df.repartition(host_partitions, host)
-            if host_partitions
-            else urls_df.repartition(host)
-        )
+    # Column-based parse_url (no string interpolation — url_col may need
+    # quoting), lower-cased to match _host_of's breaker key.
+    host = F.lower(F.coalesce(F.parse_url(F.col(url_col), F.lit("HOST")), F.lit("")))
+    urls_df = urls_df.repartition(host)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         consec_failures: dict[str, int] = {}

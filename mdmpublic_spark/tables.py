@@ -206,25 +206,17 @@ class Table:
         kept = df.where(~F.coalesce(F.expr(condition), F.lit(False)))
         return self.overwrite(kept)
 
-    def expire_snapshots(
-        self, keep_last: int = 1, older_than_ts: float | None = None
-    ) -> int:
+    def expire_snapshots(self, keep_last: int = 1) -> int:
         """Expire old snapshots (Iceberg ``expire_snapshots`` procedure):
-        drop log entries beyond the newest ``keep_last`` (or committed
-        before ``older_than_ts``) and physically remove data dirs no
-        surviving snapshot references. The current snapshot is always
-        kept. Returns the number of snapshots expired."""
+        drop log entries beyond the newest ``keep_last`` (at least the
+        current one) and physically remove data dirs no surviving snapshot
+        references. Returns the number of snapshots expired."""
         import shutil
 
         snaps = self.history()
         if not snaps:
             return 0
-        if older_than_ts is not None:
-            keep = [s for s in snaps if s.ts >= older_than_ts]
-        else:
-            keep = snaps[-max(1, keep_last):]
-        if not keep or keep[-1].snapshot_id != snaps[-1].snapshot_id:
-            keep = keep + [snaps[-1]]
+        keep = snaps[-max(1, keep_last):]
         keep_ids = {s.snapshot_id for s in keep}
         expired = [s for s in snaps if s.snapshot_id not in keep_ids]
         if not expired:

@@ -218,6 +218,29 @@ def test_lsh_block_keys_one_python_node_no_transform_filter(spark):
     _assert_no_transform_filter(p)
 
 
+def test_near_dup_passes_evaluate_signature_udf_once(spark):
+    """Each near-dup pass crosses into Python once: both sides of the
+    bucket self-join read one shared exchange, so the signature UDF is not
+    re-run per side, and the simhash popcount predicate infers no filter
+    that evaluates the UDF a second time within a side. Counted in the
+    final adaptive plan, after execution: AQE may turn the join into a
+    broadcast, and only the executed plan shows what ran."""
+    from mdmpublic_spark.operators.dedup import minhash_lsh_candidates, simhash_pairs
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("doc_id", "text")
+    passes = {
+        "shingle": minhash_lsh_candidates(docs, sketch="shingle"),
+        "token": minhash_lsh_candidates(docs, n_bands=8, n_rows=8, sketch="token"),
+        "simhash": simhash_pairs(docs),
+    }
+    counts = {}
+    for name, df in passes.items():
+        df.collect()
+        final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+        counts[name] = final.count("ArrowEvalPython")
+    assert counts == {"shingle": 1, "token": 1, "simhash": 1}, counts
+
+
 def test_minhash_shingle_arm_no_transform_filter(spark):
     """Same O(n²) guard for the near-dup shingle sketch and verify: Spark
     infers ``size(a) > 0`` for an ``explode`` of a plain attribute and

@@ -531,3 +531,32 @@ def test_iceberg_writer_roundtrip(spark, tmp_path):
     hist = t.history()
     assert [h["snapshot_id"] for h in hist] == sorted(h["snapshot_id"] for h in hist)
     assert t.expire_snapshots(keep_last=1) >= 0
+
+
+def test_iceberg_expire_snapshots_escapes_identifier(spark):
+    """expire_snapshots passes the table identifier to the procedure as a
+    SQL string literal: a quote or backslash in the name must not end the
+    literal. A stub session records the SQL; the real parser reads the
+    literal back."""
+    import re
+    import types
+
+    from mdmpublic_spark import iceberg
+
+    stub = types.SimpleNamespace(statements=[])
+
+    def sql(text):
+        stub.statements.append(text)
+        return types.SimpleNamespace(collect=lambda: [])
+
+    stub.sql = sql
+    t = object.__new__(iceberg.IcebergTable)  # the constructor needs the jar
+    t.spark, t.name = stub, "cat.db.o'bri\\en"
+    t.expire_snapshots(keep_last=2)
+    calls = [s for s in stub.statements if s.startswith("CALL")]
+    assert calls == [
+        "CALL `cat`.system.expire_snapshots("
+        "table => 'db.o\\'bri\\\\en', retain_last => 2)"
+    ]
+    literal = re.search(r"table => ('.*'), retain_last", calls[0]).group(1)
+    assert spark.sql(f"SELECT {literal} AS s").first()["s"] == "db.o'bri\\en"
