@@ -28,9 +28,8 @@ import datetime as _dt
 import json
 import os
 import shutil
-import uuid
 
-from mdmpublic_spark.tables import Snapshot, Table
+from mdmpublic_spark.tables import Snapshot, Table, write_json_atomic
 
 MANIFEST = "_backups.json"
 
@@ -65,12 +64,6 @@ class BackupManager:
         with open(self._manifest_path()) as f:
             return json.load(f)
 
-    def _save(self, gens: list[dict]) -> None:
-        tmp = self._manifest_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(gens, f, indent=1)
-        os.replace(tmp, self._manifest_path())
-
     def backup(self, table: Table, method: str = "full") -> dict:
         """Take one backup generation. Returns its manifest entry.
         Falls back to full when an incremental has no full to build on."""
@@ -104,7 +97,7 @@ class BackupManager:
             "row_count": cur.row_count,
             "schema": cur.schema,
         }
-        self._save(gens + [entry])
+        write_json_atomic(self._manifest_path(), gens + [entry])
         return entry
 
     def restore(self, dest_path: str, gen_id: int | None = None) -> Table:

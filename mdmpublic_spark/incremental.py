@@ -39,9 +39,15 @@ the scheduled full re-block to reconcile (see delta_candidate_pairs).
 
 Resume: each batch stage runs under the same StageRunner manifest as the
 full pipeline (fingerprints pin the PRE-batch master snapshot ids, so a
-crashed batch resumes mid-flight), and the master-table merges record
-their result snapshot in a per-batch manifest — re-running a completed
-batch is a no-op end to end.
+crashed batch resumes mid-flight). A per-batch manifest, written once
+before the first merge, holds those ids and nothing else. A master merge
+has landed exactly when its table moved off its pinned snapshot: the
+table's atomic snapshot log is the one record of the commit, so no crash
+can leave a second record that disagrees with it (a re-applied append
+would fold the batch twice). Re-running a completed batch is a no-op end
+to end. Precondition: a crashed batch is resumed under the same batch id
+before the next batch folds — a later batch moves the pinned tables too,
+and the crashed one would then take its pending merges for done.
 
 Reference analogs: staging→master promotion with idempotent replace
 (/root/reference/jenkins_scripts/jenkins/replicate_git_repos.sh:99-127),
@@ -67,7 +73,7 @@ from mdmpublic_spark.operators.pairs import PairGenStats, delta_candidate_pairs
 from mdmpublic_spark.operators.scoring import match_edges, page_features, score_pairs
 from mdmpublic_spark.pipeline import STAGES, PipelineConfig
 from mdmpublic_spark.plans.runner import StageRunner
-from mdmpublic_spark.tables import Table
+from mdmpublic_spark.tables import Table, write_json_atomic
 
 
 def incremental_update(
@@ -93,38 +99,20 @@ def incremental_update(
             "run pipeline.run_pipeline first"
         )
 
-    # ---- per-batch manifest: pins the pre-batch master snapshots so a
-    # resumed batch recomputes against the SAME base, and records merge
-    # progress so committed merges are not re-applied
+    # ---- per-batch manifest: pins the pre-batch master snapshots, so a
+    # resumed batch recomputes against the SAME base; whether a merge
+    # landed is read from the master table's own log (module docstring)
     manifest_path = os.path.join(work_dir, f"_inc_{batch_id}.json")
     if os.path.exists(manifest_path):
         with open(manifest_path) as f:
-            manifest = json.load(f)
+            base = json.load(f)["base_snapshots"]
     else:
-        manifest = {
-            "batch_id": batch_id,
-            "src": new_pages_path,
-            "base_snapshots": {
-                n: master[n].current_snapshot_id() for n in STAGES
-            },
-            "merges": {},
-        }
-    base = manifest["base_snapshots"]
-
-    def _save_manifest() -> None:
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, manifest_path)
-
-    _save_manifest()
+        base = {n: master[n].current_snapshot_id() for n in STAGES}
+        write_json_atomic(manifest_path, {"base_snapshots": base})
 
     def _apply_merge(name: str, fn) -> None:
-        if name in manifest["merges"]:
-            return
-        snap = fn()
-        manifest["merges"][name] = snap.snapshot_id
-        _save_manifest()
+        if master[name].current_snapshot_id() == base[name]:
+            fn()
 
     metrics = MetricsSink(f"{work_dir}/metrics", run_id=f"inc-{batch_id}")
     runner = StageRunner(spark, work_dir, metrics)

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# tokens are SPACE-split (not the alnum TOKEN_RE of textstats.py):
+# tokens are SPACE-split (not the alnum split of text.tokens_expr):
 # span dedup must reassemble the surviving text byte-identically, so the
 # tokenizer has to be a partition of the original string.  NULL text is
 # coalesced to '' so size() is 0, never -1 — without it size(null)=-1

@@ -17,9 +17,7 @@ Scale notes:
     key; AQE coalesces small rounds as components collapse.
   * ``localCheckpoint`` after every round truncates the logical plan —
     without it the plan doubles per iteration and Catalyst analysis
-    time explodes (SURVEY.md §4.2 item 3). On a cluster with an HDFS
-    checkpoint dir, ``checkpoint()`` (reliable) is the right variant —
-    controlled by the ``reliable`` flag.
+    time explodes (SURVEY.md §4.2 item 3).
   * convergence test = count + order-insensitive checksum
     (bit_xor(xxhash64(u,v))) — two scalar aggregates, no data collect.
 
@@ -119,7 +117,6 @@ def _ckpt_rdd(df: DataFrame):
 
 def connected_components(
     edges: DataFrame,
-    reliable: bool = False,
     small_graph_threshold: int = 2_000_000,
     edge_count: int | None = None,
     driver_collect_budget_bytes: int = 256 << 20,
@@ -161,18 +158,13 @@ def connected_components(
     # for the life of the session unless freed. A long CC run checkpoints
     # every checked round, so without cleanup the loop would hold every
     # generation simultaneously — executor OOM at scale, and leaked
-    # storage across queries in a long-lived application. We snapshot the
-    # persisted-RDD ids before our first checkpoint and, after each new
-    # generation materializes, free every generation this call created
-    # except the newest (RDD ids are creation-ordered and the driver is
-    # single-threaded here). Peak pinned storage is therefore ≤ 2
-    # generations regardless of round count.
+    # storage across queries in a long-lived application. After each new
+    # generation materializes, we free every generation this call created
+    # except the newest, so peak pinned storage is ≤ 2 generations
+    # regardless of round count.
     # The FINAL generation is the caller's: the returned assignment plan
     # reads it, so it stays pinned until the caller drops the DataFrame
-    # (or releases job state, as bench.py does between queries). Reliable
-    # checkpoints write files instead — cleaned by
-    # spark.cleaner.referenceTracking.cleanCheckpoints on real clusters —
-    # so the block-level cleanup only runs for the local path.
+    # (or releases job state, as bench.py does between queries).
     # Ownership is exact: we keep a handle to each generation's own
     # checkpointed RDD (via its LogicalRDD plan node, _ckpt_rdd) and
     # unpersist only those — never a global persistent-RDD diff, which
@@ -180,8 +172,7 @@ def connected_components(
     owned: list = []  # this call's checkpoint generations, oldest first
 
     def _own(df: DataFrame) -> DataFrame:
-        if not reliable:
-            owned.append(_ckpt_rdd(df))
+        owned.append(_ckpt_rdd(df))
         return df
 
     def _drop_stale() -> None:
@@ -192,7 +183,7 @@ def connected_components(
     if edge_count is None or edge_count <= small_graph_threshold:
         # eager localCheckpoint: the sizing agg drives the strategy and
         # the checkpointed edges feed whichever path wins without a rescan
-        e = _own(e.localCheckpoint(eager=True)) if not reliable else e.checkpoint(eager=True)
+        e = _own(e.localCheckpoint(eager=True))
         row = e.agg(
             F.count(F.lit(1)).alias("n"),
             F.avg(F.length("u") + F.length("v")).alias("pair_len"),
@@ -217,16 +208,12 @@ def connected_components(
     else:
         # eager=False: the checkpoint materializes inside the checksum
         # action — one Spark job per checked round instead of two.
-        e = _own(e.localCheckpoint(eager=False)) if not reliable else e.checkpoint(eager=False)
+        e = _own(e.localCheckpoint(eager=False))
     prev = _checksum(e)
     rounds = 0
     for rounds in range(1, _MAX_CC_ROUNDS + 1):
         e2 = _small_star(_large_star(e))
-        e2 = (
-            _own(e2.localCheckpoint(eager=False))
-            if not reliable
-            else e2.checkpoint(eager=False)
-        )
+        e2 = _own(e2.localCheckpoint(eager=False))
         cur = _checksum(e2)
         e = e2
         # e2's generation is fully materialized (the checksum action

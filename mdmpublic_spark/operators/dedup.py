@@ -45,23 +45,11 @@ from mdmpublic_spark.functions.text import (
     tokens_expr,
 )
 
-TOKEN_RE = "[^a-z0-9]+"  # mirror of functions/text.py tokenization, SQL-safe
-
 
 def tokenized(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, text) → distinct (id, tok) posting rows, built-ins only."""
-    return (
-        docs.select(
-            id_col,
-            F.explode(
-                F.array_distinct(
-                    F.filter(
-                        F.split(F.lower(F.col("text")), TOKEN_RE),
-                        lambda t: t != "",
-                    )
-                )
-            ).alias("tok"),
-        )
+    return docs.select(
+        id_col, F.explode(F.array_distinct(tokens_expr(F.col("text")))).alias("tok")
     )
 
 

@@ -164,7 +164,6 @@ def make_score_udf():
 
 
 _MAX_TOKENS = 1024
-_TOKEN_SPLIT = "[^a-z0-9]+"
 
 
 def page_features(pages: DataFrame, stop_hashes32: list[int] | None = None) -> DataFrame:

@@ -12,16 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from mdmpublic_spark.functions.hashing import fingerprint
-
-TOKEN_RE = "[^a-z0-9]+"
+from mdmpublic_spark.functions.text import tokens_expr
 
 # tiny closed-class stopword profiles (top function words)
 EN_STOP = ["the", "a", "of", "and", "to", "in", "is", "that", "it", "for"]
 PT_STOP = ["de", "que", "e", "o", "da", "do", "em", "um", "para", "com"]
-
-
-def _tokens(col):
-    return F.filter(F.split(F.lower(col), TOKEN_RE), lambda t: t != "")
 
 
 # GPT-2-style pre-tokenizer shape: letter runs, digit runs, and
@@ -37,7 +32,7 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Token counting: whitespace words, alnum tokens, distinct tokens,
     BPE-ish pieces, chars — the building block of corpus size accounting
     (token budgets are the planning unit of LLM-training pipelines)."""
-    toks = _tokens(F.col("text"))
+    toks = tokens_expr(F.col("text"))
     return docs.select(
         id_col,
         F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != "")).alias("n_words"),
@@ -54,7 +49,7 @@ def language_id(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Scores = closed-class token hits per profile; prediction = argmax
     with a minimum-evidence gate. Exactly expressible in SQL (oracle in
     queries/training_data.py)."""
-    toks = _tokens(F.col("text"))
+    toks = tokens_expr(F.col("text"))
     en = F.size(F.filter(toks, lambda t: t.isin(EN_STOP)))
     pt = F.size(F.filter(toks, lambda t: t.isin(PT_STOP)))
     return docs.select(
@@ -72,7 +67,7 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Quality signals: length, mean word length, stopword ratio,
     non-alnum (punct) ratio, plus a composite keep/drop flag — the
     standard pre-training corpus filter shape."""
-    toks = _tokens(F.col("text"))
+    toks = tokens_expr(F.col("text"))
     n_tok = F.size(toks)
     n_chars = F.length("text")
     alnum_chars = F.length(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", ""))

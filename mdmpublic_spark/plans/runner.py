@@ -34,7 +34,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from mdmpublic_spark.metrics import MetricsSink
-from mdmpublic_spark.tables import Table
+from mdmpublic_spark.tables import Table, write_json_atomic
 
 STATE_FILE = "_state.json"
 
@@ -62,12 +62,6 @@ class StageRunner:
         self.ran: list[str] = []
         self.skipped: list[str] = []
         self.timings: dict[str, float] = {}
-
-    def _save_state(self) -> None:
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.state, f, indent=1)
-        os.replace(tmp, self._state_path)
 
     def table(self, name: str) -> Table:
         return Table(os.path.join(self.work_dir, name))
@@ -106,12 +100,9 @@ class StageRunner:
         self.metrics.add(name, "rows", float(total))
         self.metrics.add(name, "seconds", dt)
         self.timings[name] = round(dt, 3)
-        self.state[name] = {
-            "fingerprint": fp,
-            "rows": total,
-            "snapshot_id": out.current_snapshot_id(),
-            "completed_at": time.time(),
-        }
-        self._save_state()
+        # no snapshot id here: the output table's own log is the one
+        # record of its commit
+        self.state[name] = {"fingerprint": fp, "rows": total}
+        write_json_atomic(self._state_path, self.state)
         self.ran.append(name)
         return out

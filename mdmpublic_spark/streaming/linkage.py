@@ -14,8 +14,13 @@ Exactly-once comes from two stacked layers:
    batch with the SAME epoch id on restart.
 2. ``incremental_update`` keys its per-batch manifest by that epoch id,
    so the replay skips every already-committed stage and re-applies no
-   merge — the fold is idempotent end to end (same story the batch
-   resume tests pin, tests/test_incremental.py::test_incremental_rerun_is_noop).
+   merge. A master merge's one record is its table's snapshot log: the
+   replay takes a merge for done when the table moved off the snapshot
+   the manifest pinned. That holds because the stream replays a crashed
+   epoch first, before any later epoch folds — the precondition the
+   fold states. The fold is idempotent end to end, at every crash point
+   (tests/test_incremental.py::test_incremental_rerun_is_noop and
+   ::test_fold_resumes_from_every_commit).
 
 The micro-batch is staged to a per-epoch parquet directory before the
 fold (mode=overwrite, so a replay rewrites the identical bytes): the

@@ -46,6 +46,17 @@ from pyspark.sql.types import StructType
 SNAPSHOT_LOG = "_snapshots.json"
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` by write-temp-then-rename: the
+    replace is atomic on POSIX, so a reader sees the old file or the new
+    one, never a half-written one; the temp name is unique, so two
+    writers never write into each other's temp file."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -85,13 +96,9 @@ class Table:
         return c.snapshot_id if c else None
 
     def _write_log(self, snaps: list[Snapshot]) -> None:
-        # write-temp-then-rename: the log update is atomic on POSIX, so a
-        # reader never sees a half-written log (the crash-consistency that
-        # makes stage reruns safe — uncommitted data dirs are invisible)
-        tmp = self._log_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump([vars(s) for s in snaps], f, indent=1)
-        os.replace(tmp, self._log_path())
+        # the rename is the commit: uncommitted data dirs are invisible, so
+        # the log is the one record of which writes landed
+        write_json_atomic(self._log_path(), [vars(s) for s in snaps])
 
     def _commit(self, snap: Snapshot) -> None:
         self._write_log(self.history() + [snap])

@@ -24,6 +24,28 @@ from mdmpublic_spark.tables import Table
 N_RECAPTURES = 5
 
 
+def _with_recaptures(spark, base_path: str, delta_path: str, out: str, n: int) -> str:
+    """``delta_path`` plus newer captures of ``n`` base urls, each
+    carrying another base page's html and text; written to ``out``."""
+    base = spark.read.parquet(base_path)
+    donors = base.orderBy("url").limit(2 * n).collect()
+    recap = spark.createDataFrame(
+        [
+            (
+                donors[i]["url"],
+                donors[i]["warc_ts"] + datetime.timedelta(days=1),
+                donors[i + n]["html"],
+                donors[i + n]["text"],
+                donors[i]["lang"],
+            )
+            for i in range(n)
+        ],
+        base.schema,
+    )
+    spark.read.parquet(delta_path).unionByName(recap).write.parquet(out)
+    return out
+
+
 @pytest.fixture(scope="module")
 def inc(spark, tmp_path_factory):
     """Base run + incremental batch + frozen-profile full recompute.
@@ -41,26 +63,14 @@ def inc(spark, tmp_path_factory):
     base = pages.where(~in_delta)
     delta_new = pages.where(in_delta)
 
-    donors = base.orderBy("url").limit(2 * N_RECAPTURES).collect()
-    recap_rows = [
-        (
-            donors[i]["url"],
-            donors[i]["warc_ts"] + datetime.timedelta(days=1),
-            donors[i + N_RECAPTURES]["html"],
-            donors[i + N_RECAPTURES]["text"],
-            donors[i]["lang"],
-        )
-        for i in range(N_RECAPTURES)
-    ]
-    recap = spark.createDataFrame(recap_rows, pages.schema)
-    delta = delta_new.unionByName(recap)
-
     base_path = str(root / "base.parquet")
+    new_path = str(root / "new.parquet")
     delta_path = str(root / "delta.parquet")
     union_path = str(root / "union.parquet")
     base.write.parquet(base_path)
-    delta.write.parquet(delta_path)
-    base.unionByName(delta).write.parquet(union_path)
+    delta_new.write.parquet(new_path)
+    _with_recaptures(spark, base_path, new_path, delta_path, N_RECAPTURES)
+    base.unionByName(spark.read.parquet(delta_path)).write.parquet(union_path)
 
     # the generator's Zipf head domain crosses the default d:100
     # admission cap between base and union — a real grandfathering case,
@@ -325,6 +335,65 @@ def test_insert_only_batch_equals_full(spark, tmp_path_factory):
     x = {tuple(r) for r in Table(os.path.join(wd, "score")).read(spark).select(*sc).collect()}
     y = {tuple(r) for r in Table(os.path.join(wd_full, "score")).read(spark).select(*sc).collect()}
     assert x == y
+
+
+MASTER = ("extract", "block", "features", "score", "cluster", "golden")
+
+
+@pytest.mark.parametrize("recaptures", [0, 3])
+def test_fold_resumes_from_every_commit(
+    spark, tmp_path_factory, commit_hook, table_digests, recaptures
+):
+    """A fold that dies at a commit and is rerun on the same work dir ends
+    with the master tables and counters of a fold that never died. The
+    insert-only batch (its merges are appends) dies after each commit the
+    fold makes: stage tables, master merges and the metrics append. The
+    recapture batch dies at each master merge, once before and once after
+    the rename. A merge's only record is its table's snapshot log, so a
+    resume neither skips a merge that did not land nor re-applies one
+    that did (an append re-applied would fold the batch twice)."""
+    import shutil
+
+    root = tmp_path_factory.mktemp(f"inc-crash-{recaptures}")
+    base_path, batch, _ = _insert_only_inputs(spark, root)
+    if recaptures:
+        batch = _with_recaptures(
+            spark, base_path, batch, str(root / "recap.parquet"), recaptures
+        )
+    cfg = PipelineConfig(prefix_caps={"d:": 400})
+    seeded = str(root / "seeded")
+    run_pipeline(spark, base_path, seeded, cfg)
+
+    def fold(wd: str) -> dict:
+        shutil.copytree(seeded, wd)
+        return incremental_update(spark, batch, wd, cfg)
+
+    commit_hook.arm(None)
+    want = fold(str(root / "clean"))
+    commits = commit_hook.tables
+    assert want["changed_urls"] == recaptures
+    assert commits.count("metrics") == 1
+    assert sorted(t for t in commits if t in MASTER) == sorted(MASTER)
+    want_tables = table_digests(str(root / "clean"), MASTER)
+    if recaptures:
+        merges = [k for k, t in enumerate(commits, 1) if t in MASTER]
+        points = [(k, before) for k in merges for before in (True, False)]
+    else:
+        points = [(k, False) for k in range(1, len(commits) + 1)]
+
+    for k, before in points:
+        wd = str(root / f"crash-{k}-{'before' if before else 'after'}")
+        commit_hook.arm(k, before)
+        with pytest.raises(commit_hook.Crash):
+            fold(wd)
+        commit_hook.arm(None)
+        got = incremental_update(spark, batch, wd, cfg)
+        where = (k, "before" if before else "after", commits[k - 1])
+        assert (got["new_urls"], got["changed_urls"]) == (
+            want["new_urls"],
+            want["changed_urls"],
+        ), where
+        assert table_digests(wd, MASTER) == want_tables, where
 
 
 def test_stage_widths_follow_data_not_shuffle_partitions(spark, tmp_path_factory):

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mdmpublic_spark.evaluate import pairwise_scores
-from mdmpublic_spark.pipeline import PipelineConfig, run_pipeline
+from mdmpublic_spark.pipeline import STAGES, PipelineConfig, run_pipeline
 from mdmpublic_spark.tables import Table
 
 
@@ -101,6 +101,36 @@ def test_resume_after_partial_state_loss(spark, corpus_dir, run, tmp_path):
     )
     assert set(info["skipped"]) == {"extract", "profile", "block", "pairs", "features"}
     assert info["ran"] == ["score", "cluster", "golden"]
+
+
+def test_run_resumes_from_every_commit(spark, tmp_path, commit_hook, table_digests):
+    """A run that dies right after any of its commits (the 8 stage
+    tables, then the metrics append) and is rerun on the same work dir
+    reruns only the stage it died in and the stages after it, and ends
+    with the score, cluster and golden tables of a run that never died."""
+    from mdmpublic_spark.gen.synth import generate_corpus
+
+    corpus = str(tmp_path / "corpus")
+    generate_corpus(corpus, n_pages=400)
+    pages = os.path.join(corpus, "pages.parquet")
+    outputs = ("score", "cluster", "golden")
+
+    commit_hook.arm(None)
+    run_pipeline(spark, pages, str(tmp_path / "clean"), PipelineConfig())
+    commits = commit_hook.tables
+    assert commits == [*STAGES, "metrics"]
+    want = table_digests(str(tmp_path / "clean"), outputs)
+
+    for k in range(1, len(commits) + 1):
+        wd = str(tmp_path / f"crash-{k}")
+        commit_hook.arm(k)
+        with pytest.raises(commit_hook.Crash):
+            run_pipeline(spark, pages, wd, PipelineConfig())
+        commit_hook.arm(None)
+        info = run_pipeline(spark, pages, wd, PipelineConfig())
+        assert info["skipped"] == list(STAGES[: k - 1]), commits[k - 1]
+        assert info["ran"] == list(STAGES[k - 1 :]), commits[k - 1]
+        assert table_digests(wd, outputs) == want, commits[k - 1]
 
 
 def test_config_change_invalidates(spark, corpus_dir, run):

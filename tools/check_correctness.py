@@ -51,7 +51,11 @@ def main() -> None:
     from mdmpublic_spark.queries import registry
     from mdmpublic_spark.session import get_spark
 
-    spark = get_spark("correctness-check")
+    # no console progress bar: its \r-separated [Stage …] text would sit
+    # on the same terminal line as each OK/BAD verdict
+    spark = get_spark(
+        "correctness-check", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     con = duckdb.connect()
     for t in TABLES:
         p = f"{args.sf_dir}/{t}.parquet"
